@@ -37,8 +37,6 @@ def _run_pipeline(spark, sf_dir: str, threshold: float = 0.85) -> dict:
     from sneaky_data_matcher_spark.plans import pipeline as P
 
     timings: dict[str, float] = {}
-    # SPARK_GRAFT_FUSED=1 measures the optional fused block+score path for
-    # A/B comparison; default is the (faster, measured) join path
     # Banded scoring default ON (SPARK_GRAFT_BANDED=0 for the full-eval
     # A/B): provably identical matches/clusters (tests), 89% of pairs
     # decide from cheap terms at this threshold so the edit-distance
@@ -47,11 +45,7 @@ def _run_pipeline(spark, sf_dir: str, threshold: float = 0.85) -> dict:
     # banding requires.
     cfg = P.PipelineConfig(
         threshold=threshold,
-        fused_scoring=os.environ.get("SPARK_GRAFT_FUSED", "0") == "1",
         banded_scoring=os.environ.get("SPARK_GRAFT_BANDED", "1") == "1",
-        # SPARK_GRAFT_CCPRE=0 disables the CC partition-local union-find
-        # pre-contraction for A/B runs (BENCH.md "CC pre-contraction")
-        cc_pre_contract=os.environ.get("SPARK_GRAFT_CCPRE", "1") == "1",
     )
 
     # Warm the Python/Arrow worker pool (one tiny pandas-UDF job) so the
@@ -71,27 +65,15 @@ def _run_pipeline(spark, sf_dir: str, threshold: float = 0.85) -> dict:
     n_docs = canon.count()
     timings["canonicalize"] = time.perf_counter() - t0
 
-    if cfg.fused_scoring:
-        # optional A/B path: blocking + scoring fused into one flow (see
-        # pipeline.fused_block_and_score). The JOIN path below is the
-        # measured-faster default (BENCH.md A/B). One timing covers both
-        # stages; reported under the combined key so fused pairs-rates are
-        # never compared against a blocking_pairs=0 artifact.
-        t1 = time.perf_counter()
-        scored = P.fused_block_and_score(canon, cfg).persist()
-        n_pairs = scored.count()
-        dt = time.perf_counter() - t1
-        timings["blocking_and_scoring_fused"] = dt
-    else:
-        t1 = time.perf_counter()
-        pairs = P.build_candidate_pairs(canon, cfg).persist()
-        n_pairs = pairs.count()
-        timings["blocking_pairs"] = time.perf_counter() - t1
+    t1 = time.perf_counter()
+    pairs = P.build_candidate_pairs(canon, cfg).persist()
+    n_pairs = pairs.count()
+    timings["blocking_pairs"] = time.perf_counter() - t1
 
-        t2 = time.perf_counter()
-        scored = P.score_candidates(pairs, canon, cfg).persist()
-        scored.count()
-        timings["scoring"] = time.perf_counter() - t2
+    t2 = time.perf_counter()
+    scored = P.score_candidates(pairs, canon, cfg).persist()
+    scored.count()
+    timings["scoring"] = time.perf_counter() - t2
 
     t3 = time.perf_counter()
     clusters = P.assign_clusters(scored, canon, cfg)
@@ -99,8 +81,7 @@ def _run_pipeline(spark, sf_dir: str, threshold: float = 0.85) -> dict:
     timings["clustering"] = time.perf_counter() - t3
 
     wall = time.perf_counter() - t0
-    # fused runs have no separate scoring stage: rate over the fused stage
-    score_t = timings.get("scoring") or timings.get("blocking_and_scoring_fused", 0.0)
+    score_t = timings["scoring"]
     scoring_rate = n_pairs / score_t if score_t > 0 else 0.0
     e2e_rate = n_pairs / wall if wall > 0 else 0.0
     return {

@@ -41,9 +41,8 @@ def blocking_keys(
     """canon(doc_id, doc_text, media_refs) -> (doc_id, pass, block_key).
 
     `payload_cols` optionally carries extra canon columns on every key row
-    (the fused block+score path ships scoring payload through the one block
-    shuffle instead of re-joining canon per pair side — see
-    scoring.fused_pair_scores).
+    (the streaming topology ships its scoring payload through block state
+    this way — see streaming.incremental.streaming_er_topology).
 
     Pass A 'pfx': first `prefix_tokens` tokens, `prefix_chars` chars each —
           positional prefix key (sorted-neighborhood flavor on leading text).
@@ -303,10 +302,10 @@ def salt_keys(
     blocks are by construction rare (at most total_keys/cap of them, in
     practice a tiny skewed tail). So instead of shuffle-joining the full
     keys frame against the full census, broadcast just the hot slice and
-    left-join map-side: cold keys (the overwhelming majority, carrying any
-    fused scoring payload) never shuffle here at all. If the hot slice is
-    unexpectedly huge (> hot_broadcast_limit rows — degenerate key choice),
-    fall back to the shuffle join rather than OOM the driver.
+    left-join map-side: cold keys (the overwhelming majority) never
+    shuffle here at all. If the hot slice is unexpectedly huge
+    (> hot_broadcast_limit rows — degenerate key choice), fall back to the
+    shuffle join rather than OOM the driver.
 
     block_size is reported for hot blocks; cold blocks carry null (their
     size never mattered to salting — recover it from the census if a metric
@@ -328,12 +327,7 @@ def salt_keys(
     )
 
 
-def candidate_pairs(
-    salted: DataFrame,
-    repartition_on_block: bool = True,
-    num_partitions: int | None = None,
-    cache: bool = True,
-) -> DataFrame:
+def candidate_pairs(salted: DataFrame, cache: bool = True) -> DataFrame:
     """Self-join within (pass, block_key, salt) -> distinct (doc_id_a < doc_id_b).
 
     The explicit repartition on the salted block key is the 'salted
@@ -354,56 +348,10 @@ def candidate_pairs(
     cols = ["pass", "block_key", "salt"]
     if cache:
         salted = salted.localCheckpoint(eager=False)
-    left = salted.select(*cols, F.col("doc_id").alias("doc_id_a"))
-    if repartition_on_block:
-        if num_partitions:
-            left = left.repartition(num_partitions, *cols)
-        else:
-            left = left.repartition(*cols)
+    left = salted.select(*cols, F.col("doc_id").alias("doc_id_a")).repartition(*cols)
     right = salted.select(*cols, F.col("doc_id").alias("doc_id_b"))
     pairs = left.join(right, cols).where(F.col("doc_id_a") < F.col("doc_id_b"))
     return pairs.select("doc_id_a", "doc_id_b").distinct()
-
-
-def candidate_pairs_with_payload(
-    salted: DataFrame, payload_cols: list[str], cache: bool = True
-) -> DataFrame:
-    """Fused variant of `candidate_pairs`: the block self-join ships the
-    scoring payload (`payload_cols`, attached to every key row by
-    blocking_keys(payload_cols=...)) along with the doc ids, and the
-    cross-pass dedup is a groupBy that keeps one payload copy per pair.
-
-    Output: (doc_id_a, doc_id_b, <p>_a, <p>_b ...) — ready for map-side
-    scoring with NO further join. Shuffle accounting vs the unfused path
-    (pairs.distinct() then pairs ⋈ canon ⋈ canon):
-
-      unfused: distinct on bare pairs + two shuffle joins, the second
-               carrying pairs × text bytes; canon shuffled twice.
-      fused:   the block shuffle carries keys × payload bytes (≈3 rows/doc)
-               and ONE groupBy carries pairs × 2-payload bytes; no canon
-               shuffles, two fewer stage barriers.
-
-    Payload values within a (doc_id_a, doc_id_b) group are identical by
-    construction (same doc), so `first()` is deterministic here.
-    """
-    cols = ["pass", "block_key", "salt"]
-    if cache:
-        salted = salted.localCheckpoint(eager=False)
-    a = salted.select(
-        *cols,
-        F.col("doc_id").alias("doc_id_a"),
-        *[F.col(p).alias(f"{p}_a") for p in payload_cols],
-    )
-    b = salted.select(
-        *cols,
-        F.col("doc_id").alias("doc_id_b"),
-        *[F.col(p).alias(f"{p}_b") for p in payload_cols],
-    )
-    raw = a.join(b, cols).where(F.col("doc_id_a") < F.col("doc_id_b"))
-    firsts = [
-        F.first(f"{p}_{s}").alias(f"{p}_{s}") for p in payload_cols for s in ("a", "b")
-    ]
-    return raw.groupBy("doc_id_a", "doc_id_b").agg(*firsts)
 
 
 def suffix_blocking_keys(

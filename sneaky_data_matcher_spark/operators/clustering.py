@@ -6,9 +6,9 @@ rows that share a column value one seed at a time (capped at maxJoinDepth),
 we take the full match graph and compute connected components, assigning
 every doc the min doc_id of its component.
 
-Algorithm: alternating large-star / small-star (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC 2014) — O(log n) rounds, each
-round two groupBy/join stages; proven convergent. Each iteration is
+Algorithm: large-star / small-star (Kiveris et al., "Connected Components
+in MapReduce and Beyond", SoCC 2014) in its "optimized runs" schedule —
+O(log n) rounds of groupBy/join stages; proven convergent. Each iteration is
 localCheckpoint()ed to cut lineage (a driver-side fixpoint loop is the one
 thing Catalyst cannot express).
 
@@ -165,7 +165,6 @@ def connected_components(
     matches: DataFrame,
     max_iterations: int = 25,
     checkpoint: bool = True,
-    optimized_runs: bool = True,
     pre_contract: bool = False,
     _stats: dict | None = None,
 ) -> DataFrame:
@@ -175,15 +174,13 @@ def connected_components(
     are not emitted — callers left-join and coalesce to doc_id for
     singleton clusters (see pipeline.assign_clusters).
 
-    optimized_runs=True (default) uses Kiveris et al. §4's "optimized
-    runs" schedule: repeat large-star until ITS OWN fixpoint, then one
-    small-star, then repeat. A/B'd in tools/bench_cc_schedule.py
-    (BENCH.md "CC schedule A/B", best-of-3 ×2 sessions): on a 20k-node
-    path graph (high diameter) it converges in 2 outer rounds vs 16 —
-    7.3-8.0x faster wall; on this pipeline's matcher-shaped graph (many
-    small dense clusters) it is 1.4-1.7x faster too, because skipping
-    half the small-stars saves more than the extra inner checksum jobs
-    cost. Identical assignments on both shapes (asserted per trial).
+    The schedule is Kiveris et al. §4's "optimized runs": repeat
+    large-star until ITS OWN fixpoint, then one small-star, then repeat.
+    BENCH.md "CC schedule A/B" measured it 7.3-8.0x faster than plain
+    alternation on a 20k-node path graph (2 outer rounds vs 16) and
+    1.4-1.7x faster on this pipeline's matcher-shaped graph, with
+    identical assignments.
+
     pre_contract=True runs a partition-local union-find contraction
     (see _contract_partitions) on the raw match pairs BEFORE the first
     distinct() shuffle — identical output, and on block-generated pair
@@ -225,23 +222,18 @@ def connected_components(
         try:
             for _ in range(max_iterations):
                 stats["rounds"] += 1
-                if optimized_runs:
-                    ls_prev = prev
-                    for _ in range(max_iterations):
-                        edges = _large_star(edges)
-                        if checkpoint:
-                            edges = edges.localCheckpoint(eager=True)
-                        stats["large_stars"] += 1
-                        cur = _edge_checksum(edges)
-                        if cur == ls_prev:
-                            break
-                        ls_prev = cur
-                    edges = _small_star(edges)
-                    stats["small_stars"] += 1
-                else:
-                    edges = _small_star(_large_star(edges))
+                ls_prev = prev
+                for _ in range(max_iterations):
+                    edges = _large_star(edges)
+                    if checkpoint:
+                        edges = edges.localCheckpoint(eager=True)
                     stats["large_stars"] += 1
-                    stats["small_stars"] += 1
+                    cur = _edge_checksum(edges)
+                    if cur == ls_prev:
+                        break
+                    ls_prev = cur
+                edges = _small_star(edges)
+                stats["small_stars"] += 1
                 if checkpoint:
                     edges = edges.localCheckpoint(eager=True)
                 cur = _edge_checksum(edges)

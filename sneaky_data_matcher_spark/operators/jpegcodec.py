@@ -369,10 +369,11 @@ def encode_jpeg(
                         # (mathematically identical; the matrix product's
                         # ~1e-12 error can flip np.round at an exact
                         # half-integer tie, e.g. a solid color whose luma
-                        # lands on .5 — for a flat block the Σ of equal
-                        # doubles and the ÷8 are both exact IEEE, so the
-                        # tie rounds half-even deterministically,
-                        # matching solid_roundtrip_rgb):
+                        # lands on .5. The Σ of 64 equal doubles is not
+                        # exact for every value, so parity with
+                        # solid_roundtrip_rgb is not guaranteed in
+                        # general; it is verified exhaustively over all
+                        # 256³ solid colors at quality 75):
                         f[0, 0] = shifted.sum() / 8.0
                         coefs = np.round(f / quant.reshape(8, 8)).astype(np.int64)
                         preds[ci] = _encode_block(
@@ -523,6 +524,10 @@ def decode_jpeg_rgb(payload: bytes) -> tuple[int, int, np.ndarray]:
             if frame is None:
                 raise ValueError("SOS before SOF")
             ns = seg[0]
+            if ns < len(frame["comps"]):
+                # non-interleaved: one scan per component; decoding only
+                # the first would silently return a grayscale image
+                raise UnsupportedJPEG(f"scan covers {ns} of {len(frame['comps'])} components")
             scomp = []
             for i in range(ns):
                 cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]

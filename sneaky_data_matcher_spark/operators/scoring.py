@@ -17,13 +17,6 @@ Scale notes:
   - the one Python-adjacent kernel (Jaro-Winkler) runs per Arrow batch
     inside DuckDB's vectorized C++ implementation; everything else is
     whole-stage-codegen'd.
-  - a fused alternative (ship payload through the block self-join, score
-    map-side — see pipeline.fused_block_and_score) was measured SLOWER at
-    150k docs/1M pairs (best 55s vs 41s at local[8]): the payload rides
-    2.3x more shuffle bytes (both self-join sides + the pair-dedup groupBy)
-    than this path's single distinct-pair join, and the multi-pass dup
-    factor (~1.14) is too small to amortize it. Kept as an option; the
-    equivalence test runs both.
 """
 
 from __future__ import annotations
@@ -84,14 +77,11 @@ def attach_payload(
     return pairs.join(a, "doc_id_a").join(b, "doc_id_b")
 
 
-FUSED_PAYLOAD_COLS = ["pfx", "toks", "media_refs"]
-
-
 def scoring_payload(canon: DataFrame, prefix_len: int = DEFAULT_PREFIX_LEN) -> DataFrame:
     """Attach the scoring payload to canon: the compared text prefix and
     the distinct token set, computed once per DOC pre-shuffle (never per
-    pair occurrence). Shared by the join path (attach_payload) and the
-    fused path (blocking_keys payload_cols)."""
+    pair occurrence). Shared by attach_payload and the streaming topology
+    (streaming.incremental.streaming_er_topology)."""
     return canon.withColumn(
         "pfx", F.substring(F.col("doc_text"), 1, prefix_len)
     ).withColumn("toks", F.array_distinct(F.split(F.col("doc_text"), " ")))
@@ -104,10 +94,7 @@ def score_pairs_fused(
 ) -> DataFrame:
     """Map-side scorer over a payload-carrying pair frame (doc_id_a,
     doc_id_b, pfx_a, pfx_b, toks_a, toks_b, media_refs_a, media_refs_b) —
-    the output shape of BOTH attach_payload (join path) and
-    candidate_pairs_with_payload (fused path), so the two physical plans
-    share one scoring formula and yield identical matches and clusters
-    (asserted in tests).
+    the output shape of attach_payload.
 
     ``band_threshold`` turns on BANDED evaluation — the anatomy
     measurement (BENCH.md "scoring-stage anatomy") showed the stage is

@@ -35,14 +35,7 @@ class PipelineConfig:
     score_prefix_len: int = scoring.DEFAULT_PREFIX_LEN
     cc_max_iterations: int = 25
     salting_enabled: bool = True
-    # Optional fused block+score path: ship scoring payload through the
-    # block self-join and score map-side after one pair-dedup groupBy,
-    # instead of joining the payload onto deduped pairs. Produces identical
-    # scores/clusters (asserted) but was MEASURED SLOWER (BENCH.md: best
-    # 55s vs 41s at 150k docs / 1M pairs, local[8]) — the payload crosses
-    # 2.3x more shuffle bytes than the join path. Default off; kept because
-    # the trade flips if the pair:doc ratio grows much faster than payload
-    # size (e.g. aggressive multi-pass blocking over tiny keys).
+    # Only False is valid (the fused path is gone); kept for configs that pass it.
     fused_scoring: bool = False
     # Banded scoring (r3 continuation 2, measured in BENCH.md "scoring-
     # stage anatomy"): skip the edit-distance kernels for pairs whose
@@ -80,14 +73,10 @@ class PipelineConfig:
     # trigger interval those empty batches ARE the eviction mechanism;
     # set e.g. 3_600_000 there.
     stream_state_ttl_ms: int | None = None
-    # A/B (VERDICT r2 "what's wrong" #2): cross-pass duplicate pairs are
-    # emitted in the SAME micro-batch (both passes of a doc arrive
-    # together), so a per-batch dropDuplicates before scoring is exact.
-    # True moves scoring into foreachBatch behind the dedup; False scores
-    # duplicates in-stream (dup factor ~1.14 of wasted scoring) and lets
-    # CC absorb them. Default is the measured-faster option (BENCH.md
-    # "streaming dup-scoring A/B").
-    stream_dedup_pairs_per_batch: bool = False
+
+    def __post_init__(self):
+        if self.fused_scoring:
+            raise ValueError("fused_scoring=True is no longer supported")
 
 
 def canonicalize_docs(docs: DataFrame) -> DataFrame:
@@ -121,44 +110,21 @@ def build_candidate_pairs(canon: DataFrame, cfg: PipelineConfig) -> DataFrame:
         prefix_chars=cfg.prefix_chars,
         sorted_tokens=cfg.sorted_tokens,
     )
-    return blocking.candidate_pairs(_salted_keys(keys, cfg))
+    if cfg.salting_enabled:
+        salted = blocking.salt_keys(keys, cfg.max_block_size)
+    else:
+        salted = (
+            keys.withColumn("salt", F.lit(0))
+            .withColumn("n_salts", F.lit(1))
+            .withColumn("block_size", F.lit(None).cast("long"))
+        )
+    return blocking.candidate_pairs(salted)
 
 
 def score_candidates(pairs: DataFrame, canon: DataFrame, cfg: PipelineConfig) -> DataFrame:
     with_payload = scoring.attach_payload(pairs, canon, cfg.score_prefix_len)
     band = cfg.threshold if cfg.banded_scoring else None
     return scoring.score_pairs_fused(with_payload, cfg.weights, band_threshold=band)
-
-
-def _salted_keys(keys: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    if cfg.salting_enabled:
-        return blocking.salt_keys(keys, cfg.max_block_size)
-    return (
-        keys.withColumn("salt", F.lit(0))
-        .withColumn("n_salts", F.lit(1))
-        .withColumn("block_size", F.lit(None).cast("long"))
-    )
-
-
-def fused_block_and_score(canon: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """canon -> scored candidate pairs in one fused flow: payload-carrying
-    blocking keys -> salted block self-join -> pair-dedup groupBy -> map-side
-    scoring. Identical scores to build_candidate_pairs + score_candidates
-    (asserted in tests), minus two canon shuffles and two stage barriers."""
-    pay = scoring.scoring_payload(canon, cfg.score_prefix_len)
-    keys = blocking.blocking_keys(
-        pay,
-        prefix_tokens=cfg.prefix_tokens,
-        prefix_chars=cfg.prefix_chars,
-        sorted_tokens=cfg.sorted_tokens,
-        payload_cols=scoring.FUSED_PAYLOAD_COLS,
-    )
-    salted = _salted_keys(keys, cfg)
-    deduped = blocking.candidate_pairs_with_payload(
-        salted, scoring.FUSED_PAYLOAD_COLS
-    )
-    band = cfg.threshold if cfg.banded_scoring else None
-    return scoring.score_pairs_fused(deduped, cfg.weights, band_threshold=band)
 
 
 def assign_clusters(scored: DataFrame, canon: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -181,11 +147,7 @@ def run(docs: DataFrame, cfg: PipelineConfig | None = None) -> dict[str, DataFra
     """Full logical pipeline; returns every stage for inspection/persist."""
     cfg = cfg or PipelineConfig()
     canon = canonicalize_docs(docs)
-    if cfg.fused_scoring:
-        scored = fused_block_and_score(canon, cfg)
-        pairs = scored.select("doc_id_a", "doc_id_b")
-    else:
-        pairs = build_candidate_pairs(canon, cfg)
-        scored = score_candidates(pairs, canon, cfg)
+    pairs = build_candidate_pairs(canon, cfg)
+    scored = score_candidates(pairs, canon, cfg)
     clusters = assign_clusters(scored, canon, cfg)
     return {"canon": canon, "pairs": pairs, "scored": scored, "clusters": clusters}

@@ -193,20 +193,8 @@ def run_pipeline(
 
     try:
         canon = run.stage("canon", lambda: P.canonicalize_docs(docs), force=force)
-        if cfg.fused_scoring:
-            # fused path: one committed stage covers blocking+scoring; the
-            # pairs view is a projection of it (no separate table needed)
-            scored = run.stage(
-                "scored", lambda: P.fused_block_and_score(canon, cfg), force=force
-            )
-            pairs = scored.select("doc_id_a", "doc_id_b")
-        else:
-            pairs = run.stage(
-                "pairs", lambda: P.build_candidate_pairs(canon, cfg), force=force
-            )
-            scored = run.stage(
-                "scored", lambda: P.score_candidates(pairs, canon, cfg), force=force
-            )
+        pairs = run.stage("pairs", lambda: P.build_candidate_pairs(canon, cfg), force=force)
+        scored = run.stage("scored", lambda: P.score_candidates(pairs, canon, cfg), force=force)
         clusters = run.stage("clusters", lambda: P.assign_clusters(scored, canon, cfg), force=force)
         entity_ids = None
         if stable_ids:

@@ -29,6 +29,15 @@ def _local_dirs() -> str:
     return "/tmp"
 
 
+def _driver_memory() -> str:
+    """$SPARK_DRIVER_MEM, else half the physical RAM, at most 16g: a heap cap
+    above the machine's RAM lets G1 grow the heap until the OS kills the JVM."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    ram_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024**3
+    return f"{max(1, min(16, ram_gib // 2))}g"
+
+
 def get_spark(
     app_name: str = "sneaky_data_matcher_spark",
     cpus: int | None = None,
@@ -53,7 +62,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         # shuffle/spill dir on tmpfs: local-mode stand-in for the NVMe-backed
         # local dirs a production cluster uses — on rotational /tmp the
         # shuffle write becomes a serial bottleneck that caps scaling.

@@ -21,6 +21,7 @@ small parity exports.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # Candidate dialects, mirroring the reference's variant sweep (CsvUtil.java:
 # 19-116): comma/tab/semicolon/pipe separators, each with and without header,
@@ -220,12 +221,13 @@ def _read_backslash_csv(
     is per-batch, not per-row. Column count is fixed by the header (or
     first line), matching the reference's header-driven CSVParser.
 
-    The header is dropped exactly ONCE — the first line of partition 0
-    (file offset 0); data lines byte-identical to the header are kept,
-    as commons-csv keeps them (ADVICE r4 #3). Rows with MORE cells than
-    the header: `on_overflow='truncate'` (default) drops the extras —
-    the same semantics as Spark's own PERMISSIVE CSV reader — while
-    `'error'` raises on the first such line for strict parity audits."""
+    The header is dropped once PER FILE — each file's first non-empty line,
+    when it equals the header; data lines byte-identical to the header
+    are kept, as commons-csv keeps them (ADVICE r4 #3). Rows with MORE
+    cells than the header: `on_overflow='truncate'` (default) drops the
+    extras — the same semantics as Spark's own PERMISSIVE CSV reader —
+    while `'error'` raises on the first such line for strict parity
+    audits."""
     import csv as _csv
     from typing import Iterator
 
@@ -261,20 +263,20 @@ def _read_backslash_csv(
         raise ValueError(f"on_overflow must be 'truncate' or 'error', got {on_overflow!r}")
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        # Drop the header ONLY at its physical position: first line of
-        # partition 0 (the text source reads partition 0 from file offset
-        # 0 in order). A global `ln != head_line` filter also dropped
-        # every DATA line byte-identical to the header — silent loss.
-        tc = TaskContext.get()
-        drop_header = header and tc is not None and tc.partitionId() == 0
+        # Drop the header ONLY at its physical position: the first line of
+        # each file, read by the split that starts at offset 0 (a task may
+        # read several files' splits in turn). A global `ln != head_line`
+        # filter also dropped every DATA line byte-identical to the
+        # header — silent loss.
+        started: set[str] = set()  # files whose first line has passed
         for pdf in batches:
-            lines = [ln for ln in pdf["value"].tolist() if ln != ""]
-            if drop_header and lines and lines[0] == head_line:
-                lines = lines[1:]
-            if lines:
-                drop_header = False  # only the first non-empty line ever
+            pdf = pdf[pdf["value"] != ""]
+            if header:
+                st = pdf[pdf["_at_start"] & ~pdf["_file"].isin(started)]
+                firsts = st.index[~st["_file"].duplicated()]
+                started.update(st["_file"])
+                pdf = pdf.drop(firsts[pdf.loc[firsts, "value"] == head_line])
+            lines = pdf["value"].tolist()
             out: list[list[str | None]] = []
 
             def _fit(raw: list) -> list:
@@ -316,7 +318,15 @@ def _read_backslash_csv(
                     out.append(cells)
             yield pd.DataFrame(out, columns=names, dtype=object)
 
-    return spark.read.text(path).mapInPandas(parse, schema=schema)
+    return (
+        spark.read.text(path)
+        .select(
+            "value",
+            F.col("_metadata.file_path").alias("_file"),
+            (F.col("_metadata.file_block_start") == 0).alias("_at_start"),
+        )
+        .mapInPandas(parse, schema=schema)
+    )
 
 
 def export_csv(wide: DataFrame, path: str, single_file: bool = True) -> None:

@@ -117,8 +117,7 @@ def streaming_session_stats(
 # Stateful streaming candidate generation (applyInPandasWithState)
 # ---------------------------------------------------------------------------
 
-# Output: the fused-scoring shape — pair ids + both texts, no further join
-# needed downstream (mirrors blocking.candidate_pairs_with_payload).
+# Output: pair ids + both sides' text (or payload), so scoring needs no join.
 PAIR_OUT_SCHEMA = "doc_id_a string, doc_id_b string, text_a string, text_b string"
 _PAIR_STATE_SCHEMA = "doc_ids array<string>, texts array<string>"
 
@@ -507,8 +506,8 @@ def streaming_er_topology(
     generic pair-state schema stays flat; it is decoded per pair side
     after emission. Cross-pass duplicate pairs are NOT deduped before
     clustering — duplicate edges are a no-op to connected components
-    (batch-measured dup factor ~1.14; the per-batch dedup alternative is
-    A/B-measured in BENCH.md).
+    (batch-measured dup factor ~1.14; BENCH.md "Streaming dup-scoring
+    A/B" measured a per-batch dedup before scoring as no faster).
 
     With caps that never bind (small corpus, no hot blocks) this is
     exactly equivalent to the batch pipeline without salting (asserted in
@@ -538,28 +537,6 @@ def streaming_er_topology(
         max_state_per_block=cfg.stream_max_state_per_block,
         state_ttl_ms=cfg.stream_state_ttl_ms,
     )
-    if cfg.stream_dedup_pairs_per_batch:
-        # A/B variant: cross-pass duplicate pairs always land in the same
-        # micro-batch (both passes of a doc arrive together), so a
-        # per-batch dropDuplicates before scoring is exact — it trades one
-        # per-batch shuffle for the ~1.14x duplicate scoring work. Scoring
-        # then runs inside foreachBatch on the deduped frame (same DuckDB
-        # kernel, identical formula). Measured in BENCH.md.
-        weights, threshold = cfg.weights, cfg.threshold
-        band = cfg.threshold if cfg.banded_scoring else None
-
-        def fb(batch_df, _batch_id):
-            deduped = batch_df.dropDuplicates(["doc_id_a", "doc_id_b"])
-            scored = _score_pair_stream(deduped, weights, band_threshold=band)
-            m = scored.where(F.col("score") >= threshold).select(
-                "doc_id_a", "doc_id_b"
-            )
-            incremental_cc_update(io, m, table)
-
-        w = pairs.writeStream.foreachBatch(fb).outputMode("append")
-        if checkpoint_dir:
-            w = w.option("checkpointLocation", checkpoint_dir)
-        return w.start()
     # Score inside ONE mapInPandas stage rather than the batch path's
     # scalar-Arrow-UDF + native-expression mix: Spark 4.1.2's scalar
     # EvalPython input queue casts its input rows to UnsafeRow, and rows

@@ -67,10 +67,11 @@ def test_duplicate_and_reversed_edges(spark):
     _run(spark, [("a", "b"), ("a", "b"), ("b", "a"), ("c", "d")])
 
 
-def test_optimized_runs_schedule_same_output(spark):
-    """Kiveris 'optimized runs' (large-star to fixpoint, then small-star)
-    must produce identical assignments on a high-diameter path plus a
-    random graph, with the stats hook reporting the schedule shape."""
+def test_star_schedule_matches_oracle(spark):
+    """The one CC schedule, Kiveris 'optimized runs' (large-star to
+    fixpoint, then small-star), must match the union-find oracle on a
+    high-diameter path plus a random graph, with the stats hook reporting
+    the schedule shape."""
     rng = random.Random(11)
     nodes = [f"n{i:04d}" for i in range(200)]
     edges = [(f"p{i:03d}", f"p{i+1:03d}") for i in range(99)] + [
@@ -80,7 +81,7 @@ def test_optimized_runs_schedule_same_output(spark):
     stats = {}
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in connected_components(df, optimized_runs=True, _stats=stats).collect()
+        for r in connected_components(df, _stats=stats).collect()
     }
     assert got == _oracle(edges)
     assert stats["large_stars"] >= stats["small_stars"] > 0

@@ -222,6 +222,18 @@ def test_informix_pipe_backslash(spark, tmp_path):
     assert got["1"] == "pipe | inside"
 
 
+def test_backslash_dialect_two_files_drop_each_header(spark, tmp_path):
+    """A directory of backslash-dialect files: every file's header line is
+    dropped, and a data line byte-identical to the header is still kept."""
+    d = tmp_path / "unl"
+    d.mkdir()
+    _write(str(d / "a.unl"), 'id|name|notes\n1|alice|"pipe \\| inside"\n2|bob|plain \\| path\n')
+    _write(str(d / "b.unl"), "id|name|notes\n3|carol|x \\| y\nid|name|notes\n")
+    df = csvio.read_csv_auto(spark, str(d))
+    got = sorted((r["id"], r["name"]) for r in df.collect())
+    assert got == [("1", "alice"), ("2", "bob"), ("3", "carol"), ("id", "name")]
+
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 

@@ -136,6 +136,18 @@ def test_progressive_rejected_as_unsupported():
         J.decode_jpeg_rgb(bytes(payload))
 
 
+def test_partial_scan_rejected_as_unsupported():
+    """A scan covering fewer components than the frame (non-interleaved
+    baseline) must route to UnsupportedJPEG, not decode as grayscale."""
+    img = np.zeros((8, 8, 3), dtype=np.uint8)
+    payload = bytearray(J.encode_jpeg(img))
+    i = payload.find(b"\xff\xda")
+    assert payload[i + 4] == 3  # Ns after the 2-byte segment length
+    payload[i + 4] = 1
+    with pytest.raises(J.UnsupportedJPEG):
+        J.decode_jpeg_rgb(bytes(payload))
+
+
 def test_truncated_stream_raises():
     img = np.zeros((8, 8, 3), dtype=np.uint8)
     payload = J.encode_jpeg(img)

@@ -168,25 +168,11 @@ def test_salting_bounds_block_size(synth_corpus):
     assert worst <= cfg.max_block_size * 2, worst
 
 
-def test_fused_equals_unfused(synth_corpus):
-    """The fused block+score path (one payload-carrying shuffle, map-side
-    scoring) must produce the same scored pair set and the same clusters as
-    the join path (pairs -> attach_payload -> score) — same kernels on the
-    same inputs, different physical plan."""
-    docs, _ = synth_corpus
-    res_f = P.run(docs, P.PipelineConfig(fused_scoring=True))
-    res_u = P.run(docs, P.PipelineConfig(fused_scoring=False))
-
-    def scored_set(res):
-        return {
-            (r["doc_id_a"], r["doc_id_b"], round(r["score"], 9))
-            for r in res["scored"].select("doc_id_a", "doc_id_b", "score").collect()
-        }
-
-    assert scored_set(res_f) == scored_set(res_u)
-    cl_f = {r["doc_id"]: r["cluster_id"] for r in res_f["clusters"].collect()}
-    cl_u = {r["doc_id"]: r["cluster_id"] for r in res_u["clusters"].collect()}
-    assert cl_f == cl_u
+def test_fused_scoring_rejected():
+    """The fused block+score path is gone: fused_scoring only accepts False."""
+    P.PipelineConfig(fused_scoring=False)
+    with pytest.raises(ValueError):
+        P.PipelineConfig(fused_scoring=True)
 
 
 def test_banded_scoring_identical_matches_and_clusters(synth_corpus):

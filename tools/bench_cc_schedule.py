@@ -1,16 +1,16 @@
-"""A/B: connected-components iteration schedule (VERDICT r2 next #6).
+"""A/B: partition-local union-find pre-contraction before the
+connected-components star rounds (clustering._contract_partitions).
 
-Compares the default alternating large-star/small-star schedule against
-Kiveris et al. §4's "optimized runs" (large-star repeated to its own
-fixpoint, then one small-star) on two graph shapes:
+Runs connected_components with and without pre_contract on three graph
+shapes:
 
-  - path: one high-diameter component (the shape optimized runs targets)
+  - path: one high-diameter component
   - matcher: many small dense clusters + noise edges (this pipeline's
     actual match-graph shape)
+  - dense: few large cliques (the hot-block shape)
 
 Asserts identical assignments, reports wall + star/checksum counts.
-Results recorded in BENCH.md; the faster schedule on the matcher shape is
-the connected_components default.
+Results recorded in BENCH.md.
 
 Usage: python tools/bench_cc_schedule.py [path_n] [trials]
 """
@@ -57,17 +57,13 @@ def main() -> None:
             res: dict[str, dict] = {}
             assigns = {}
             for _ in range(trials):
-                for name, opt, pre in (
-                    ("alternating", False, False),
-                    ("optimized_runs", True, False),
-                    ("optimized_pre_contract", True, True),
-                ):
+                for name, pre in (("plain", False), ("pre_contract", True)):
                     stats: dict = {}
                     t0 = time.perf_counter()
                     a = {
                         (r["doc_id"], r["cluster_id"])
                         for r in connected_components(
-                            df, optimized_runs=opt, pre_contract=pre, _stats=stats
+                            df, pre_contract=pre, _stats=stats
                         ).collect()
                     }
                     wall = round(time.perf_counter() - t0, 2)
@@ -75,8 +71,7 @@ def main() -> None:
                     cur["walls"].append(wall)
                     assigns.setdefault(name, a)
                     assert assigns[name] == a
-            assert assigns["alternating"] == assigns["optimized_runs"], shape
-            assert assigns["alternating"] == assigns["optimized_pre_contract"], shape
+            assert assigns["plain"] == assigns["pre_contract"], shape
             out[shape] = {"n_edges": len(edges)}
             for name in res:
                 out[shape][name] = {
