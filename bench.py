@@ -168,7 +168,9 @@ def run_once(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from sneaky_data_matcher_spark.session import _cpus
+
+    cpus = _cpus()
 
     if "--scaling" in sys.argv:
         _scaling(sf_dir)

@@ -24,18 +24,8 @@ Scale notes:
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# The fixpoint loop temporarily retunes session conf (AQE off, loop-sized
-# shuffle partitions). Those knobs are session-global, so concurrent CC
-# calls on one session would race on set/restore; serialize them. Other
-# concurrent queries on the same session during a CC loop would still see
-# the loop settings — documented non-reentrancy, acceptable for a
-# single-driver pipeline.
-_CONF_LOCK = threading.Lock()
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -164,7 +154,6 @@ def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
 def connected_components(
     matches: DataFrame,
     max_iterations: int = 25,
-    checkpoint: bool = True,
     pre_contract: bool = False,
     _stats: dict | None = None,
 ) -> DataFrame:
@@ -176,22 +165,21 @@ def connected_components(
 
     The schedule is Kiveris et al. §4's "optimized runs": repeat
     large-star until ITS OWN fixpoint, then one small-star, then repeat.
-    BENCH.md "CC schedule A/B" measured it 7.3-8.0x faster than plain
-    alternation on a 20k-node path graph (2 outer rounds vs 16) and
-    1.4-1.7x faster on this pipeline's matcher-shaped graph, with
-    identical assignments.
+    Every step is localCheckpoint()ed, which bounds lineage; the loop runs
+    under the caller's session settings and sets no session conf.
 
     pre_contract=True runs a partition-local union-find contraction
     (see _contract_partitions) on the raw match pairs BEFORE the first
     distinct() shuffle — identical output, and on block-generated pair
     sets (k members -> k(k-1)/2 co-located pairs) it shrinks both the
-    initial shuffle and every star round to ~node-count volume. Measured
-    faster on all three A/B graph shapes (tools/bench_cc_schedule.py /
-    BENCH.md: path 2.3x — it also collapses diameter, 17 large-stars ->
-    5 — matcher 1.1x, dense 1.3x). Default False at the operator level so
-    generic callers keep the minimal plan and both paths stay
-    driver-proven (er_clusters vs er_clusters_contracted); the pipeline
-    turns it on via PipelineConfig.cc_pre_contract.
+    initial shuffle and every star round to ~node-count volume. On a
+    4-vCPU local[4] session (tools/bench_cc_schedule.py 20000, BENCH.md
+    "CC under session settings") it ran 2.6x faster on the path graph (it
+    also collapses diameter, 17 large-stars -> 4), 10% slower on the
+    matcher shape and even on the dense shape. Default False at the
+    operator level so generic callers keep the minimal plan and both paths
+    stay driver-proven (er_clusters vs er_clusters_contracted); the
+    pipeline turns it on via PipelineConfig.cc_pre_contract.
 
     `_stats`, if passed, receives {"rounds", "large_stars",
     "small_stars"} for benchmarking.
@@ -201,50 +189,27 @@ def connected_components(
     )
     if pre_contract:
         edges = _contract_partitions(edges)
-    edges = edges.distinct()
-    if checkpoint:
-        edges = edges.localCheckpoint(eager=True)
+    edges = edges.distinct().localCheckpoint(eager=True)
     prev = _edge_checksum(edges)
-
-    # The fixpoint loop issues ~6 micro-shuffles per iteration. Left at the
-    # session's scan-sized settings, each one pays AQE re-planning plus a
-    # full complement of near-empty tasks, and that fixed driver cost — not
-    # the edge data — dominates CC wall-clock. Size the loop's shuffles to
-    # the edge count and skip AQE inside the loop; restore settings after.
-    conf = edges.sparkSession.conf
-    with _CONF_LOCK:
-        old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-        old_sp = conf.get("spark.sql.shuffle.partitions", "200")
-        loop_parts = max(8, min(int(old_sp), prev[0] // 50_000 + 8))
-        conf.set("spark.sql.adaptive.enabled", "false")
-        conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        stats = {"rounds": 0, "large_stars": 0, "small_stars": 0}
-        try:
-            for _ in range(max_iterations):
-                stats["rounds"] += 1
-                ls_prev = prev
-                for _ in range(max_iterations):
-                    edges = _large_star(edges)
-                    if checkpoint:
-                        edges = edges.localCheckpoint(eager=True)
-                    stats["large_stars"] += 1
-                    cur = _edge_checksum(edges)
-                    if cur == ls_prev:
-                        break
-                    ls_prev = cur
-                edges = _small_star(edges)
-                stats["small_stars"] += 1
-                if checkpoint:
-                    edges = edges.localCheckpoint(eager=True)
-                cur = _edge_checksum(edges)
-                if cur == prev:
-                    break
-                prev = cur
-        finally:
-            conf.set("spark.sql.adaptive.enabled", old_aqe)
-            conf.set("spark.sql.shuffle.partitions", old_sp)
-        if _stats is not None:
-            _stats.update(stats)
+    stats = {"rounds": 0, "large_stars": 0, "small_stars": 0}
+    for _ in range(max_iterations):
+        stats["rounds"] += 1
+        ls_prev = prev
+        for _ in range(max_iterations):
+            edges = _large_star(edges).localCheckpoint(eager=True)
+            stats["large_stars"] += 1
+            cur = _edge_checksum(edges)
+            if cur == ls_prev:
+                break
+            ls_prev = cur
+        edges = _small_star(edges).localCheckpoint(eager=True)
+        stats["small_stars"] += 1
+        cur = _edge_checksum(edges)
+        if cur == prev:
+            break
+        prev = cur
+    if _stats is not None:
+        _stats.update(stats)
     # Fixpoint: every edge is (node, root). Emit both node->root and
     # root->root so component representatives appear in the output.
     assign = edges.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))

@@ -51,6 +51,37 @@ def media_agreement(a: Column, b: Column) -> Column:
     )
 
 
+def token_set_jaccard(a: Column, b: Column) -> Column:
+    """|a ∩ b| / |a ∪ b| over two distinct-token arrays; 1.0 when both are
+    empty."""
+    inter = F.size(F.array_intersect(a, b))
+    un = F.size(F.array_union(a, b))
+    return F.when(un == 0, F.lit(1.0)).otherwise(
+        inter.cast("double") / un.cast("double")
+    )
+
+
+def weighted_score(w: dict[str, float]) -> Column:
+    """The score fold over the jw/lev_ratio/tok_jaccard/media_agree columns.
+    Batch and stream scoring share it: a different term order could
+    ulp-shift a boundary score between the two."""
+    return (
+        w["jw"] * F.col("jw")
+        + w["lev"] * F.col("lev_ratio")
+        + w["tok"] * F.col("tok_jaccard")
+        + w["med"] * F.col("media_agree")
+    )
+
+
+def band_prune(w: dict[str, float], band_threshold: float) -> tuple[Column, Column]:
+    """(cheap partial score, prunable) over the tok_jaccard/media_agree
+    columns. Sound upper bound: jw <= 1 and lev_ratio <= 1; the 1e-9 margin
+    makes pruning strictly conservative against float-order ulp noise, so
+    the match set is bit-identical to full evaluation."""
+    cheap = w["tok"] * F.col("tok_jaccard") + w["med"] * F.col("media_agree")
+    return cheap, cheap + F.lit(w["jw"] + w["lev"]) < F.lit(band_threshold - 1e-9)
+
+
 def attach_payload(
     pairs: DataFrame, canon: DataFrame, prefix_len: int = DEFAULT_PREFIX_LEN
 ) -> DataFrame:
@@ -117,11 +148,7 @@ def score_pairs_fused(
     histograms) must score with band_threshold at their own floor — or
     None for the classic full evaluation (the default)."""
     w = weights or DEFAULT_WEIGHTS
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    un = F.size(F.array_union("toks_a", "toks_b"))
-    tok_jac = F.when(un == 0, F.lit(1.0)).otherwise(
-        inter.cast("double") / un.cast("double")
-    )
+    tok_jac = token_set_jaccard(F.col("toks_a"), F.col("toks_b"))
     med = media_agreement(F.col("media_refs_a"), F.col("media_refs_b"))
     jw_c = jaro_winkler(F.col("pfx_a"), F.col("pfx_b"))
     lev_c = levenshtein_ratio(F.col("pfx_a"), F.col("pfx_b"))
@@ -136,18 +163,8 @@ def score_pairs_fused(
             lev_c.alias("lev_ratio"),
             "tok_jaccard",
             "media_agree",
-        ).withColumn(
-            "score",
-            w["jw"] * F.col("jw")
-            + w["lev"] * F.col("lev_ratio")
-            + w["tok"] * F.col("tok_jaccard")
-            + w["med"] * F.col("media_agree"),
-        )
-    cheap = w["tok"] * F.col("tok_jaccard") + w["med"] * F.col("media_agree")
-    # sound upper bound: jw <= 1 and lev_ratio <= 1; the 1e-9 margin makes
-    # pruning strictly conservative against float-order ulp noise, so the
-    # match set is bit-identical to full evaluation
-    prunable = cheap + F.lit(w["jw"] + w["lev"]) < F.lit(band_threshold - 1e-9)
+        ).withColumn("score", weighted_score(w))
+    cheap, prunable = band_prune(w, band_threshold)
     # The two kernels are skipped differently (verified in the formatted
     # plan — PLANS.md "banded scoring"):
     #   - levenshtein is a native codegen expression, so the CASE below
@@ -173,14 +190,9 @@ def score_pairs_fused(
         "lev_ratio",
         "tok_jaccard",
         "media_agree",
-        F.when(
-            F.col("jw").isNull(), cheap
-        ).otherwise(
-            w["jw"] * F.col("jw")
-            + w["lev"] * F.col("lev_ratio")
-            + w["tok"] * F.col("tok_jaccard")
-            + w["med"] * F.col("media_agree")
-        ).alias("score"),
+        F.when(F.col("jw").isNull(), cheap)
+        .otherwise(weighted_score(w))
+        .alias("score"),
     )
 
 

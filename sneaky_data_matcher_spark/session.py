@@ -38,6 +38,15 @@ def _driver_memory() -> str:
     return f"{max(1, min(16, ram_gib // 2))}g"
 
 
+def _cpus(cpus: int | None = None) -> int:
+    """``cpus`` if given, else $SPARK_GRAFT_CPUS, else this machine's CPU
+    count: more local task slots than cores only oversubscribes the box."""
+    if cpus is not None:
+        return cpus
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "sneaky_data_matcher_spark",
     cpus: int | None = None,
@@ -46,11 +55,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS or 32. Shuffle partitions default
-    to the core count — on a real cluster you would set 2-3x total cores.
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS or the machine's CPU count (see
+    ``_cpus``). Shuffle partitions default to the core count — on a real
+    cluster you would set 2-3x total cores.
     """
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus(cpus)
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     builder = (

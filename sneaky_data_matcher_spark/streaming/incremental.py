@@ -17,6 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.similarity import _jw_batch, levenshtein_ratio
+from ..operators.scoring import (
+    band_prune,
+    media_agreement,
+    token_set_jaccard,
+    weighted_score,
+)
 from ..plans.pipeline import canonicalize_docs
 from ..sources.spans import SPAN_SCHEMA
 
@@ -260,109 +267,76 @@ def salt_keyed_stream(
 
 
 # ---------------------------------------------------------------------------
-# Streaming pair scoring (mapInPandas; see streaming_er_topology for why
-# the batch scorer's scalar Arrow UDF cannot run downstream of the state op)
+# Streaming pair scoring (jw in mapInPandas; see streaming_er_topology for
+# why the batch scorer's scalar Arrow UDF cannot run downstream of the
+# state op)
 # ---------------------------------------------------------------------------
 
-SCORED_PAIR_SCHEMA = "doc_id_a string, doc_id_b string, score double"
+_PAYLOAD_SCHEMA = "pfx string, toks array<string>, media_refs array<string>"
+_JW_SCHEMA = (
+    "doc_id_a string, doc_id_b string, pfx_a string, pfx_b string, "
+    "tok_jaccard double, media_agree double, jw double"
+)
 
 
 def _score_pair_stream(
     pairs: DataFrame, weights, band_threshold: float | None = None
 ) -> DataFrame:
     """pairs(doc_id_a, doc_id_b, text_a, text_b) where text_* is the JSON
-    SCORING payload {pfx, toks, media_refs} (r3: trimmed per-doc upstream
-    by scoring.scoring_payload — the full doc_text no longer rides the
-    block state or the pair shuffle) -> (doc_id_a, doc_id_b, score).
+    SCORING payload {pfx, toks, media_refs} (trimmed per doc upstream by
+    scoring.scoring_payload, so the full doc_text never rides the block
+    state or the pair shuffle) -> (doc_id_a, doc_id_b, score).
 
-    One Arrow-batched mapInPandas stage computing the SAME formula as
-    operators.scoring.score_pairs_fused, term by term in the same fold
-    order: jw and levenshtein through the same DuckDB kernels the batch
-    path uses (functions/similarity._jw_batch; DuckDB levenshtein ==
-    Spark's native — the er_pair_scores oracle hash-matches them), token
-    jaccard and media agreement as DuckDB list ops mirroring the native
-    array ops (toks arrive already distinct, exactly like the batch
-    payload's `toks` column). Batch equivalence is asserted in
-    tests/test_streaming.py::test_streaming_er_topology_matches_batch."""
+    The SAME formula as operators.scoring.score_pairs_fused, built from
+    its expressions: the payload is decoded with from_json, token jaccard,
+    media agreement, the band bound, levenshtein_ratio and the score fold
+    are the batch's native Spark expressions. Only jw runs in Python, in
+    one Arrow-batched mapInPandas stage through the batch's DuckDB kernel
+    (similarity._jw_batch). Levenshtein stays native: DuckDB's counts
+    UTF-8 bytes, Spark's counts code points, as does length(). Banded
+    mode keeps the batch contract: pruned rows get NULL jw arguments (an
+    O(1) kernel call), no levenshtein and the cheap partial score. Batch
+    equivalence is asserted in tests/test_streaming.py."""
     w = dict(weights)
-    cheap_cols = (
-        "CASE WHEN len(list_distinct(ta || tb)) = 0 THEN 1.0 "
-        "  ELSE CAST(len(list_intersect(ta, tb)) AS DOUBLE) "
-        "    / CAST(len(list_distinct(ta || tb)) AS DOUBLE) END AS tok_jaccard, "
-        "CASE WHEN len(list_intersect(ma, mb)) > 0 THEN 1.0 "
-        "  WHEN len(ma) = 0 AND len(mb) = 0 THEN 0.5 ELSE 0.0 END AS media_agree"
+    empty = F.array().cast("array<string>")
+    sides = []
+    for s in ("a", "b"):
+        p = F.from_json(f"text_{s}", _PAYLOAD_SCHEMA)
+        sides += [
+            F.coalesce(p["pfx"], F.lit("")).alias(f"pfx_{s}"),
+            F.coalesce(p["toks"], empty).alias(f"toks_{s}"),
+            F.coalesce(p["media_refs"], empty).alias(f"media_refs_{s}"),
+        ]
+    terms = pairs.select("doc_id_a", "doc_id_b", *sides).select(
+        "doc_id_a",
+        "doc_id_b",
+        "pfx_a",
+        "pfx_b",
+        token_set_jaccard(F.col("toks_a"), F.col("toks_b")).alias("tok_jaccard"),
+        media_agreement(F.col("media_refs_a"), F.col("media_refs_b")).alias(
+            "media_agree"
+        ),
     )
-    kernels = (
-        "jaro_winkler_similarity(pfx_a, pfx_b) AS jw, "
-        "CASE WHEN greatest(length(pfx_a), length(pfx_b)) = 0 THEN 1.0 "
-        "  ELSE 1.0 - CAST(levenshtein(pfx_a, pfx_b) AS DOUBLE) "
-        "    / CAST(greatest(length(pfx_a), length(pfx_b)) AS DOUBLE) END AS lev_ratio"
-    )
-    full_score = (
-        f"{w['jw']!r} * jw + {w['lev']!r} * lev_ratio + {w['tok']!r} * tok_jaccard "
-        f"+ {w['med']!r} * media_agree"
-    )
-    if band_threshold is None:
-        sql = (
-            "SELECT doc_id_a, doc_id_b, "
-            f"{full_score} AS score FROM ("
-            f"SELECT doc_id_a, doc_id_b, {kernels}, {cheap_cols} FROM b)"
-        )
-    else:
-        # the same sound bound as batch banded scoring (scoring.py): pairs
-        # whose cheap terms + max possible jw/lev miss the threshold skip
-        # both edit-distance kernels (DuckDB CASE evaluates branches only
-        # for qualifying rows); their cheap partial stays sub-threshold so
-        # the downstream match filter sees an identical set
-        cheap_expr = f"{w['tok']!r} * tok_jaccard + {w['med']!r} * media_agree"
-        jw_inline = "jaro_winkler_similarity(pfx_a, pfx_b)"
-        lev_inline = (
-            "CASE WHEN greatest(length(pfx_a), length(pfx_b)) = 0 THEN 1.0 "
-            "  ELSE 1.0 - CAST(levenshtein(pfx_a, pfx_b) AS DOUBLE) "
-            "    / CAST(greatest(length(pfx_a), length(pfx_b)) AS DOUBLE) END"
-        )
-        sql = (
-            "SELECT doc_id_a, doc_id_b, "
-            f"CASE WHEN {cheap_expr} + {w['jw'] + w['lev']!r} < {band_threshold!r} - 1e-9 "
-            f"  THEN {cheap_expr} "
-            # same left-assoc term order as the full path — a different
-            # association could ulp-shift a boundary score vs the batch twin
-            f"  ELSE {w['jw']!r} * {jw_inline} + {w['lev']!r} * ({lev_inline}) "
-            f"    + {w['tok']!r} * tok_jaccard + {w['med']!r} * media_agree END AS score "
-            f"FROM (SELECT doc_id_a, doc_id_b, pfx_a, pfx_b, {cheap_cols} FROM b)"
-        )
+    if band_threshold is not None:
+        cheap, prunable = band_prune(w, band_threshold)
+        terms = terms.withColumn("pfx_a", F.when(~prunable, F.col("pfx_a")))
+        terms = terms.withColumn("pfx_b", F.when(~prunable, F.col("pfx_b")))
 
     def op(batches):  # pragma: no cover (runs on executors)
-        import json
-
-        import duckdb
-        import pandas as pd
-
-        con = duckdb.connect()
-        con.execute("SET threads TO 1")  # NOTES.md: in-UDF fan-out kills scaling
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pa = pdf["text_a"].map(json.loads)
-            pb = pdf["text_b"].map(json.loads)
-            batch = pd.DataFrame(
-                {
-                    "doc_id_a": pdf["doc_id_a"],
-                    "doc_id_b": pdf["doc_id_b"],
-                    "pfx_a": pa.map(lambda p: p.get("pfx") or ""),
-                    "pfx_b": pb.map(lambda p: p.get("pfx") or ""),
-                    "ta": pa.map(lambda p: p.get("toks") or []),
-                    "tb": pb.map(lambda p: p.get("toks") or []),
-                    "ma": pa.map(lambda p: p.get("media_refs") or []),
-                    "mb": pb.map(lambda p: p.get("media_refs") or []),
-                }
-            )
-            con.register("b", batch)
-            out = con.execute(sql).df()
-            con.unregister("b")
-            yield out
+            yield pdf.assign(jw=_jw_batch(pdf["pfx_a"], pdf["pfx_b"]))
 
-    return pairs.mapInPandas(op, schema=SCORED_PAIR_SCHEMA)
+    scored = terms.mapInPandas(op, schema=_JW_SCHEMA)
+    lev = levenshtein_ratio(F.col("pfx_a"), F.col("pfx_b"))
+    if band_threshold is None:
+        scored = scored.withColumn("lev_ratio", lev)
+        score = weighted_score(w)
+    else:
+        scored = scored.withColumn(
+            "jw", F.when(~prunable, F.col("jw"))
+        ).withColumn("lev_ratio", F.when(~prunable, lev))
+        score = F.when(F.col("jw").isNull(), cheap).otherwise(weighted_score(w))
+    return scored.select("doc_id_a", "doc_id_b", score.alias("score"))
 
 
 # ---------------------------------------------------------------------------
@@ -537,17 +511,17 @@ def streaming_er_topology(
         max_state_per_block=cfg.stream_max_state_per_block,
         state_ttl_ms=cfg.stream_state_ttl_ms,
     )
-    # Score inside ONE mapInPandas stage rather than the batch path's
-    # scalar-Arrow-UDF + native-expression mix: Spark 4.1.2's scalar
+    # jw runs in a mapInPandas stage rather than the batch path's scalar
+    # Arrow UDF: Spark 4.1.2's scalar
     # EvalPython input queue casts its input rows to UnsafeRow, and rows
     # emitted by the upstream applyInPandasWithState arrive as
     # GenericInternalRow — any scalar pandas UDF downstream of the state op
     # dies with a ClassCastException once a micro-batch actually emits
     # pairs (an exchange doesn't help: the optimizer pushes the UDF's input
-    # projection back below it). mapInPandas tolerates generic rows. The
-    # kernel reuses the SAME DuckDB jaro_winkler/levenshtein as batch and
-    # mirrors score_pairs_fused's formula term by term and fold order —
-    # batch equivalence is asserted in tests.
+    # projection back below it). mapInPandas tolerates generic rows, so jw
+    # runs there through the batch's DuckDB kernel; every other term and
+    # the fold are score_pairs_fused's native expressions — batch
+    # equivalence is asserted in tests.
     scored = _score_pair_stream(
         pairs,
         cfg.weights,

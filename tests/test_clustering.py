@@ -34,10 +34,11 @@ def _oracle(edges: list[tuple[str, str]]) -> dict[str, str]:
     return {n: min(members) for members in comp.values() for n in members}
 
 
-def _run(spark, edges):
+def _run(spark, edges, pre_contract=False):
     df = spark.createDataFrame(edges, "doc_id_a string, doc_id_b string")
     got = {
-        r["doc_id"]: r["cluster_id"] for r in connected_components(df).collect()
+        r["doc_id"]: r["cluster_id"]
+        for r in connected_components(df, pre_contract=pre_contract).collect()
     }
     assert got == _oracle(edges)
 
@@ -65,6 +66,32 @@ def test_random_graph(spark):
 
 def test_duplicate_and_reversed_edges(spark):
     _run(spark, [("a", "b"), ("a", "b"), ("b", "a"), ("c", "d")])
+    for pre_contract in (False, True):  # the empty match set
+        _run(spark, [], pre_contract)
+
+
+def test_star_loop_runs_under_session_conf(spark, monkeypatch):
+    """The star loop sets no session conf: every large-star step sees the
+    AQE and shuffle-partition settings the caller's session had."""
+    from sneaky_data_matcher_spark.operators import clustering
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    seen = []
+    large_star = clustering._large_star
+
+    def recording(edges):
+        seen.append(tuple(spark.conf.get(k) for k in keys))
+        return large_star(edges)
+
+    monkeypatch.setattr(clustering, "_large_star", recording)
+    old_parts = spark.conf.get(keys[1])
+    spark.conf.set(keys[1], "3")  # a value no default sets
+    try:
+        before = tuple(spark.conf.get(k) for k in keys)
+        _run(spark, [(f"p{i:02d}", f"p{i+1:02d}") for i in range(20)])
+    finally:
+        spark.conf.set(keys[1], old_parts)
+    assert seen and set(seen) == {before}
 
 
 def test_star_schedule_matches_oracle(spark):

@@ -636,3 +636,61 @@ def test_streaming_er_topology_banded_matches_batch(spark):
         assert got == want
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.parametrize("band_threshold", [None, 0.62])
+def test_stream_scoring_matches_batch_on_non_ascii(spark, band_threshold):
+    """The stream scorer must give the batch scorer's exact scores on
+    accented and non-BMP prefixes, where a UTF-8 byte edit distance and a
+    code-point edit distance differ, in full and banded mode."""
+    from sneaky_data_matcher_spark.operators.scoring import (
+        DEFAULT_THRESHOLD,
+        DEFAULT_WEIGHTS,
+        score_pairs_fused,
+    )
+
+    texts = [
+        ("1", "2", "café noir crème", "cafe noir creme"),
+        ("3", "4", "naïve résumé über", "naive resume uber"),
+        ("5", "6", "𝔘nicode 😀 grin face", "unicode 😁 grin face"),
+        ("7", "8", "東京 タワー 展望台", "東京 タワ 展望台"),
+        ("9", "10", "zebra quartz", "apple mango"),  # pruned when banded
+    ]
+    rows = [
+        (a, b, ta, tb, sorted(set(ta.split())), sorted(set(tb.split())), [], [])
+        for a, b, ta, tb in texts
+    ]
+    payload = spark.createDataFrame(
+        rows,
+        "doc_id_a string, doc_id_b string, pfx_a string, pfx_b string, "
+        "toks_a array<string>, toks_b array<string>, "
+        "media_refs_a array<string>, media_refs_b array<string>",
+    )
+    batch = {
+        (r["doc_id_a"], r["doc_id_b"]): r["score"]
+        for r in score_pairs_fused(
+            payload, DEFAULT_WEIGHTS, band_threshold=band_threshold
+        ).collect()
+    }
+    pairs = payload.select(
+        "doc_id_a",
+        "doc_id_b",
+        *(
+            F.to_json(
+                F.struct(
+                    F.col(f"pfx_{s}").alias("pfx"),
+                    F.col(f"toks_{s}").alias("toks"),
+                    F.col(f"media_refs_{s}").alias("media_refs"),
+                )
+            ).alias(f"text_{s}")
+            for s in ("a", "b")
+        ),
+    )
+    stream = {
+        (r["doc_id_a"], r["doc_id_b"]): r["score"]
+        for r in S._score_pair_stream(
+            pairs, DEFAULT_WEIGHTS, band_threshold=band_threshold
+        ).collect()
+    }
+    assert stream == batch
+    assert batch[("1", "2")] >= DEFAULT_THRESHOLD

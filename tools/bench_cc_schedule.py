@@ -9,7 +9,8 @@ shapes:
     actual match-graph shape)
   - dense: few large cliques (the hot-block shape)
 
-Asserts identical assignments, reports wall + star/checksum counts.
+Asserts identical assignments, reports best and per-trial walls plus
+star counts.
 Results recorded in BENCH.md.
 
 Usage: python tools/bench_cc_schedule.py [path_n] [trials]
@@ -47,7 +48,7 @@ def main() -> None:
     from sneaky_data_matcher_spark.operators.clustering import connected_components
     from sneaky_data_matcher_spark.session import get_spark
 
-    spark = get_spark(app_name="bench-cc-schedule", cpus=8)
+    spark = get_spark(app_name="bench-cc-schedule")
     out: dict[str, dict] = {}
     try:
         for shape, edges in _graphs(path_n).items():
@@ -76,6 +77,7 @@ def main() -> None:
             for name in res:
                 out[shape][name] = {
                     "best_sec": min(res[name]["walls"]),
+                    "walls": res[name]["walls"],
                     **res[name]["stats"],
                 }
     finally:

@@ -36,7 +36,7 @@ def main() -> int:
     from sneaky_data_matcher_spark.session import get_spark
     from sneaky_data_matcher_spark.sources.spans import derive_spans
 
-    spark = get_spark(app_name="explain", cpus=8)
+    spark = get_spark(app_name="explain")
     sections: list[tuple[str, str, list[tuple[str, bool]]]] = []
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
