@@ -714,8 +714,12 @@ def er_matches(spark, sf_dir):
     return s.where(score >= 0.8).select("doc_id_a", "doc_id_b")
 
 
-# Transitive clusters: Spark large-star/small-star vs DuckDB recursive-CTE
+# Transitive clusters: Spark connected components vs DuckDB recursive-CTE
 # reachability closure (small graph at sf0.01 — the oracle's O(n*m) is fine).
+# At sf0.01 and sf0.1 the match graph is far under
+# clustering._DRIVER_MAX_EDGES, so this proves the driver pass (Arrow
+# collect + numpy union-find); the star loop is proven in
+# tests/test_clustering.py with the bound forced below each graph.
 # The chain is a reusable CTE: er_cluster_stats and the Fellegi–Sunter
 # estimation queries build on `clusters`.
 _ER_CLUSTERS_CTE = (
@@ -752,11 +756,12 @@ def er_clusters(spark, sf_dir):
     return _cached(spark, sf_dir, "er_clusters", build)
 
 
-# Same clusters through the partition-local union-find pre-contraction
-# path (clustering._contract_partitions): a pure optimization for dense
-# block-generated pair sets, so its oracle is IDENTICAL to er_clusters —
-# the driver proves output-equivalence of the optimized physical plan
-# end-to-end, not just in pytest.
+# Same clusters with pre_contract=True, so its oracle is IDENTICAL to
+# er_clusters. Pre-contraction (clustering._contract_partitions) acts only
+# in the star loop, above clustering._DRIVER_MAX_EDGES; at sf0.01 and
+# sf0.1 this query takes the driver pass like er_clusters and proves that
+# the flag leaves small graphs untouched. The contraction path itself is
+# proven in tests/test_clustering.py (bound forced below the graph).
 @_q(
     "er_clusters_contracted",
     f"WITH RECURSIVE {_ER_CLUSTERS_CTE} SELECT doc_id, cluster_id FROM clusters",

@@ -1,4 +1,4 @@
-"""Transitive clustering: large-star/small-star connected components.
+"""Transitive clustering: connected components of the match graph.
 
 The set-oriented generalization of the reference's join-by-shared-value
 enrichment (repositories/SearchRepository.java:249-297): instead of merging
@@ -6,13 +6,18 @@ rows that share a column value one seed at a time (capped at maxJoinDepth),
 we take the full match graph and compute connected components, assigning
 every doc the min doc_id of its component.
 
-Algorithm: large-star / small-star (Kiveris et al., "Connected Components
-in MapReduce and Beyond", SoCC 2014) in its "optimized runs" schedule —
-O(log n) rounds of groupBy/join stages; proven convergent. Each iteration is
-localCheckpoint()ed to cut lineage (a driver-side fixpoint loop is the one
-thing Catalyst cannot express).
+Two paths, one contract (connected_components):
+  - driver pass: a match graph of at most _DRIVER_MAX_EDGES edges is
+    collected once as Arrow and clustered on the driver by a vectorized
+    numpy union-find (_min_labels). Match graphs are sparse (a few edges
+    per matched doc), so this covers every corpus the pipeline has run on.
+  - star loop: a larger graph runs large-star / small-star (Kiveris et
+    al., "Connected Components in MapReduce and Beyond", SoCC 2014) in its
+    "optimized runs" schedule — O(log n) rounds of groupBy/join stages;
+    proven convergent. Each iteration is localCheckpoint()ed to cut lineage
+    (a driver-side fixpoint loop is the one thing Catalyst cannot express).
 
-Scale notes:
+Scale notes for the star loop:
   - edge frames are (u, v) string pairs; every round shuffles on u — at
     10^12 docs this is the dominant shuffle, so rounds matter more than
     per-round constants; large/small-star's O(log n) rounds beat naive
@@ -24,8 +29,59 @@ Scale notes:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# Largest match graph (edges after dropping NULL endpoints and self-loops)
+# that connected_components clusters on the driver. A memory limit, not a
+# speed crossover; measured on 4 vCPUs, local[4] (tools/bench_cc_schedule.py,
+# BENCH.md "CC driver pass (4 vCPU)"). The driver pass beat the star loop
+# at every size it completed, up to 1.96M edges (14.1 s against 30.6 s for
+# the faster star arm). With a 2 GB driver heap (the benchmark's) and
+# 45-character ids it passed at 1.96M edges and ran out of heap in its
+# single collect partition at 3.9M; the bound is half the largest graph
+# that passed there. At 982k such edges the pass held 382 MB of driver
+# Python memory and a 92 MB Arrow result.
+_DRIVER_MAX_EDGES = 1_000_000
+
+
+def _min_labels(cu: np.ndarray, cv: np.ndarray, n: int) -> np.ndarray:
+    """Union-find over int codes 0..n-1 joined by edges (cu[i], cv[i]):
+    returns, for every code, the minimum code of its component.
+
+    Vectorized hook-and-compress: each round hooks every root onto the
+    smallest root it shares an edge with (np.minimum.at), then jumps every
+    pointer to its root. Pointers only ever decrease, so the forest stays
+    acyclic and each root is its tree's minimum. A root with an edge to
+    another tree either hooks or is hooked onto, so the trees of a
+    component at least halve per round: O(log V) rounds of whole-array
+    operations, no per-edge Python loop."""
+    parent = np.arange(n, dtype=np.int64)
+    while True:
+        ru, rv = parent[cu], parent[cv]
+        cross = ru != rv
+        if not cross.any():
+            return parent
+        # an edge inside one tree stays inside it: drop it for good
+        cu, cv, ru, rv = cu[cross], cv[cross], ru[cross], rv[cross]
+        np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+
+
+def _components(u, v) -> tuple[np.ndarray, np.ndarray]:
+    """Edge endpoint arrays -> (ids, component-minimum index per id).
+
+    ids are the sorted distinct endpoints; factorize(sort=True) makes the
+    minimum code the minimum id (Python's string order is code-point order,
+    the same as Spark's UTF-8 byte order). Endpoints must not be NULL."""
+    codes, ids = pd.factorize(np.concatenate([u, v]), sort=True)
+    return np.asarray(ids), _min_labels(codes[: len(u)], codes[len(u):], len(ids))
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -81,63 +137,25 @@ def _contract_partitions(edges: DataFrame) -> DataFrame:
     pre-processing); it is a pure optimization with identical output
     (asserted in tests/test_clustering.py on path/random/pipeline graphs).
 
-    Kernel shape: Arrow-batched mapInPandas; per partition the string ids
-    are factorized once (pandas, C speed) and the union-find itself runs
-    over a compact int array with path halving — the only Python-level
-    loop is O(E_p α(V_p)) on small ints, and it runs once per partition,
-    off the row-at-a-time path. Local roots are chosen as the MINIMUM id
-    in the local component so the emitted edge set is a deterministic
-    function of the partition's content."""
+    Kernel shape: Arrow-batched mapInPandas running the driver pass's
+    union-find (_components) once per partition. Local roots are the
+    MINIMUM id in the local component, so the emitted edge set is a
+    deterministic function of the partition's content."""
     # id dtype (string or integral) rides through untouched: factorize
-    # codes drive the union-find, uniques keep the original values.
+    # codes drive the union-find, the ids keep the original values.
     schema = edges.select("u", "v").schema
 
     def fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        us, vs = [], []
-        for b in batches:
-            us.append(b["u"])
-            vs.append(b["v"])
-        if not us:
+        batches = list(batches)
+        if not batches:
             return
-        u = pd.concat(us, ignore_index=True)
-        v = pd.concat(vs, ignore_index=True)
-        codes, uniques = pd.factorize(pd.concat([u, v], ignore_index=True))
-        n = len(uniques)
-        cu, cv = codes[: len(u)], codes[len(u):]
-        # factorize maps nulls to code -1, which would silently index
-        # parent[-1] (the LAST unique) and merge unrelated components.
-        # A null endpoint edge is meaningless; drop the edge — exactly
-        # what the join-based CC path does implicitly (ADVICE r3).
-        ok = (cu >= 0) & (cv >= 0)
-        if not ok.all():
-            cu, cv = cu[ok], cv[ok]
-        parent = np.arange(n, dtype=np.int64)
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]  # path halving
-                x = parent[x]
-            return x
-
-        for a, b in zip(cu.tolist(), cv.tolist()):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by min id keeps labels deterministic without a
-                # second relabel pass: uniques order is first-seen, so
-                # compare the actual strings
-                if uniques[rb] < uniques[ra]:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        roots = np.array([find(i) for i in range(n)], dtype=np.int64)
-        mask = roots != np.arange(n)
-        out = pd.DataFrame(
-            {"u": uniques[np.arange(n)[mask]], "v": uniques[roots[mask]]}
+        ids, root = _components(
+            np.concatenate([b["u"].to_numpy() for b in batches]),
+            np.concatenate([b["v"].to_numpy() for b in batches]),
         )
-        if len(out):
-            yield out
+        moved = root != np.arange(len(ids))
+        if moved.any():
+            yield pd.DataFrame({"u": ids[moved], "v": ids[root[moved]]})
 
     return edges.mapInPandas(fn, schema)
 
@@ -161,37 +179,62 @@ def connected_components(
 
     cluster_id = min doc_id of the component. Docs absent from `matches`
     are not emitted — callers left-join and coalesce to doc_id for
-    singleton clusters (see pipeline.assign_clusters).
+    singleton clusters (see pipeline.assign_clusters). Edges with a NULL
+    endpoint are ignored, and so is a node whose only edges are self-loops.
 
-    The schedule is Kiveris et al. §4's "optimized runs": repeat
+    Driver pass: the edges are first collected with one bounded Arrow
+    action (at most _DRIVER_MAX_EDGES + 1 rows). If they all came back,
+    the components are computed on the driver (_components) and returned
+    as a small local frame; the rest of this docstring is about the
+    larger graphs, which go through the star loop.
+
+    The star loop is Kiveris et al. §4's "optimized runs": repeat
     large-star until ITS OWN fixpoint, then one small-star, then repeat.
     Every step is localCheckpoint()ed, which bounds lineage; the loop runs
     under the caller's session settings and sets no session conf.
 
     pre_contract=True runs a partition-local union-find contraction
-    (see _contract_partitions) on the raw match pairs BEFORE the first
-    distinct() shuffle — identical output, and on block-generated pair
-    sets (k members -> k(k-1)/2 co-located pairs) it shrinks both the
-    initial shuffle and every star round to ~node-count volume. On a
-    4-vCPU local[4] session (tools/bench_cc_schedule.py 20000, BENCH.md
-    "CC under session settings") it ran 2.6x faster on the path graph (it
-    also collapses diameter, 17 large-stars -> 4), 10% slower on the
-    matcher shape and even on the dense shape. Default False at the
-    operator level so generic callers keep the minimal plan and both paths
-    stay driver-proven (er_clusters vs er_clusters_contracted); the
-    pipeline turns it on via PipelineConfig.cc_pre_contract.
+    (see _contract_partitions) on the raw match pairs BEFORE the star
+    loop's first distinct() shuffle — identical output, and on
+    block-generated pair sets (k members -> k(k-1)/2 co-located pairs) it
+    shrinks both the initial shuffle and every star round to ~node-count
+    volume. On a 4-vCPU local[4] session (tools/bench_cc_schedule.py
+    20000, BENCH.md "CC under session settings") it ran 2.6x faster on the
+    path graph (it also collapses diameter, 17 large-stars -> 4), 10%
+    slower on the matcher shape and even on the dense shape. It acts only
+    on graphs above the driver bound. Default False at the operator level
+    so generic callers keep the minimal plan; the pipeline turns it on via
+    PipelineConfig.cc_pre_contract.
 
     `_stats`, if passed, receives {"rounds", "large_stars",
-    "small_stars"} for benchmarking.
+    "small_stars"} for benchmarking; all three are 0 on the driver pass.
     """
+    # `!=` is NULL when either endpoint is, so this drops NULL endpoints
+    # and self-loops, as _sym does in the star loop; collecting non-NULL
+    # ids also keeps Arrow -> numpy from turning nullable longs to float64.
     edges = matches.select(
         F.col("doc_id_a").alias("u"), F.col("doc_id_b").alias("v")
-    )
+    ).where(F.col("u") != F.col("v"))
+    # The probe's job computes every partition of `edges` (and of a lazy
+    # upstream such as blocking + scoring); checkpointing stores them, so
+    # the star loop reads them back instead of running the upstream again.
+    edges = edges.localCheckpoint(eager=False)
+    stats = {"rounds": 0, "large_stars": 0, "small_stars": 0}
+    table = edges.limit(_DRIVER_MAX_EDGES + 1).toArrow()
+    if table.num_rows <= _DRIVER_MAX_EDGES:
+        if _stats is not None:
+            _stats.update(stats)
+        ids, root = _components(
+            table.column("u").to_numpy(), table.column("v").to_numpy()
+        )
+        # _sym's union gives the id type the star loop's output would have
+        return matches.sparkSession.createDataFrame(
+            pd.DataFrame({"u": ids, "v": ids[root]}), _sym(edges).schema
+        ).toDF("doc_id", "cluster_id")
     if pre_contract:
         edges = _contract_partitions(edges)
     edges = edges.distinct().localCheckpoint(eager=True)
     prev = _edge_checksum(edges)
-    stats = {"rounds": 0, "large_stars": 0, "small_stars": 0}
     for _ in range(max_iterations):
         stats["rounds"] += 1
         ls_prev = prev

@@ -1,9 +1,10 @@
-"""Large-star/small-star connected components vs a union-find oracle."""
+"""Connected components (driver pass and star loop) vs a union-find oracle."""
 
 from __future__ import annotations
 
 import random
 
+from sneaky_data_matcher_spark.operators import clustering
 from sneaky_data_matcher_spark.operators.clustering import connected_components
 
 
@@ -34,47 +35,152 @@ def _oracle(edges: list[tuple[str, str]]) -> dict[str, str]:
     return {n: min(members) for members in comp.values() for n in members}
 
 
-def _run(spark, edges, pre_contract=False):
-    df = spark.createDataFrame(edges, "doc_id_a string, doc_id_b string")
-    got = {
+def _force_star_loop(monkeypatch):
+    # -1, not 0: even the empty graph then skips the driver pass
+    monkeypatch.setattr(clustering, "_DRIVER_MAX_EDGES", -1)
+
+
+def _cc(spark, edges, schema="doc_id_a string, doc_id_b string", **kw):
+    df = spark.createDataFrame(edges, schema)
+    return {
         r["doc_id"]: r["cluster_id"]
-        for r in connected_components(df, pre_contract=pre_contract).collect()
+        for r in connected_components(df, **kw).collect()
     }
-    assert got == _oracle(edges)
 
 
-def test_simple_chain(spark):
-    _run(spark, [("a", "b"), ("b", "c"), ("d", "e")])
+def _run(spark, edges, pre_contract=False) -> dict:
+    stats: dict = {}
+    assert _cc(spark, edges, pre_contract=pre_contract, _stats=stats) == _oracle(edges)
+    return stats
 
 
-def test_star_and_cycle(spark):
-    _run(spark, [("hub", f"n{i}") for i in range(20)] + [("x", "y"), ("y", "z"), ("z", "x")])
+def _run_both(spark, monkeypatch, edges, pre_contract=False) -> None:
+    """Check `edges` against the oracle on the driver pass, then on the
+    star loop with the bound forced below the graph."""
+    assert _run(spark, edges, pre_contract)["rounds"] == 0
+    with monkeypatch.context() as m:
+        _force_star_loop(m)
+        assert _run(spark, edges, pre_contract)["rounds"] > 0
 
 
-def test_long_path(spark):
+def test_simple_chain(spark, monkeypatch):
+    _run_both(spark, monkeypatch, [("a", "b"), ("b", "c"), ("d", "e")])
+
+
+def test_star_and_cycle(spark, monkeypatch):
+    _run_both(
+        spark,
+        monkeypatch,
+        [("hub", f"n{i}") for i in range(20)] + [("x", "y"), ("y", "z"), ("z", "x")],
+    )
+
+
+def test_long_path(spark, monkeypatch):
     # path of 64 nodes: stresses the O(log n) round count
-    _run(spark, [(f"p{i:03d}", f"p{i+1:03d}") for i in range(63)])
+    _run_both(spark, monkeypatch, [(f"p{i:03d}", f"p{i+1:03d}") for i in range(63)])
 
 
-def test_random_graph(spark):
+def test_random_graph(spark, monkeypatch):
     rng = random.Random(7)
     nodes = [f"n{i:04d}" for i in range(300)]
     edges = [tuple(rng.sample(nodes, 2)) for _ in range(350)]
     edges = [(min(a, b), max(a, b)) for a, b in edges]
-    _run(spark, edges)
+    _run_both(spark, monkeypatch, edges)
 
 
-def test_duplicate_and_reversed_edges(spark):
-    _run(spark, [("a", "b"), ("a", "b"), ("b", "a"), ("c", "d")])
+def test_duplicate_and_reversed_edges(spark, monkeypatch):
+    _run_both(spark, monkeypatch, [("a", "b"), ("a", "b"), ("b", "a"), ("c", "d")])
     for pre_contract in (False, True):  # the empty match set
-        _run(spark, [], pre_contract)
+        _run_both(spark, monkeypatch, [], pre_contract)
+
+
+def test_min_labels_matches_union_find():
+    """The vectorized kernel against the loop union-find on random
+    multigraphs (self-loops, repeats, isolated codes), no Spark."""
+    import numpy as np
+
+    for seed in range(200):
+        rng = random.Random(seed)
+        n = rng.randint(1, 60)
+        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(rng.randint(0, 80))]
+        want = {i: i for i in range(n)} | _oracle(edges)
+        cu = np.array([a for a, _ in edges], dtype=np.int64)
+        cv = np.array([b for _, b in edges], dtype=np.int64)
+        assert clustering._min_labels(cu, cv, n).tolist() == [want[i] for i in range(n)]
+
+
+def test_driver_bound_boundary(spark, monkeypatch):
+    """_DRIVER_MAX_EDGES edges take the driver pass (no star step, zero
+    star stats); one edge more takes the star loop."""
+    large_stars = []
+    large_star = clustering._large_star
+
+    def recording(edges):
+        large_stars.append(1)
+        return large_star(edges)
+
+    monkeypatch.setattr(clustering, "_large_star", recording)
+    monkeypatch.setattr(clustering, "_DRIVER_MAX_EDGES", 6)
+    path = [(f"p{i}", f"p{i+1}") for i in range(7)]
+    assert _run(spark, path[:6]) == {"rounds": 0, "large_stars": 0, "small_stars": 0}
+    assert not large_stars
+    stats = _run(spark, path)
+    assert large_stars and stats["large_stars"] >= stats["small_stars"] > 0
+
+
+def test_star_loop_evaluates_upstream_once(spark, monkeypatch, tmp_path):
+    """Above the bound, the probe and the star loop share one evaluation
+    of a lazy upstream (each batch of the mapInPandas below logs its rows)."""
+    log = tmp_path / "rows.log"
+
+    def upstream(batches):
+        for b in batches:
+            with open(log, "a") as f:
+                f.write(f"{len(b)}\n")
+            yield b.assign(
+                doc_id_a="n" + (b["id"] // 4).astype(str),
+                doc_id_b="n" + b["id"].astype(str),
+            )[["doc_id_a", "doc_id_b"]]
+
+    src = spark.range(200, numPartitions=4).repartition(4, "id")
+    matches = src.mapInPandas(upstream, "doc_id_a string, doc_id_b string")
+    monkeypatch.setattr(clustering, "_DRIVER_MAX_EDGES", 10)
+    stats: dict = {}
+    out = connected_components(matches, pre_contract=True, _stats=stats).collect()
+    assert stats["rounds"] > 0 and len(out) == 200
+    assert sum(int(x) for x in log.read_text().split()) == 200
+
+
+def test_null_endpoints_and_self_loops(spark, monkeypatch):
+    """Edges with a NULL endpoint are ignored, and a node whose only edges
+    are self-loops is not emitted — on both paths alike."""
+    edges = [("a", "b"), ("b", None), (None, "c"), ("c", "d"), (None, None), ("e", "e")]
+    want = {"a": "a", "b": "a", "c": "c", "d": "c"}
+    stats: dict = {}
+    assert _cc(spark, edges, _stats=stats) == want and stats["rounds"] == 0
+    _force_star_loop(monkeypatch)
+    assert _cc(spark, edges, _stats=stats) == want and stats["rounds"] > 0
+
+
+def test_nullable_long_ids(spark, monkeypatch):
+    """Nullable bigint ids keep their type and exact value on both paths:
+    a NULL among the collected ids would turn the column to float64,
+    which cannot hold 2**60 + 1."""
+    big = 2**60
+    edges = [(1, 2), (2, None), (None, 3), (3, 4), (big + 1, big), (big + 2, big + 1)]
+    df = spark.createDataFrame(edges, "doc_id_a long, doc_id_b long")
+    want = {1: 1, 2: 1, 3: 3, 4: 3, big: big, big + 1: big, big + 2: big}
+    for star_loop in (False, True):
+        if star_loop:
+            _force_star_loop(monkeypatch)
+        out = connected_components(df)
+        assert [f.dataType.simpleString() for f in out.schema] == ["bigint", "bigint"]
+        assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == want
 
 
 def test_star_loop_runs_under_session_conf(spark, monkeypatch):
     """The star loop sets no session conf: every large-star step sees the
     AQE and shuffle-partition settings the caller's session had."""
-    from sneaky_data_matcher_spark.operators import clustering
-
     keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     seen = []
     large_star = clustering._large_star
@@ -84,6 +190,7 @@ def test_star_loop_runs_under_session_conf(spark, monkeypatch):
         return large_star(edges)
 
     monkeypatch.setattr(clustering, "_large_star", recording)
+    _force_star_loop(monkeypatch)
     old_parts = spark.conf.get(keys[1])
     spark.conf.set(keys[1], "3")  # a value no default sets
     try:
@@ -94,31 +201,27 @@ def test_star_loop_runs_under_session_conf(spark, monkeypatch):
     assert seen and set(seen) == {before}
 
 
-def test_star_schedule_matches_oracle(spark):
+def test_star_schedule_matches_oracle(spark, monkeypatch):
     """The one CC schedule, Kiveris 'optimized runs' (large-star to
     fixpoint, then small-star), must match the union-find oracle on a
     high-diameter path plus a random graph, with the stats hook reporting
     the schedule shape."""
+    _force_star_loop(monkeypatch)
     rng = random.Random(11)
     nodes = [f"n{i:04d}" for i in range(200)]
     edges = [(f"p{i:03d}", f"p{i+1:03d}") for i in range(99)] + [
         tuple(sorted(rng.sample(nodes, 2))) for _ in range(150)
     ]
-    df = spark.createDataFrame(edges, "doc_id_a string, doc_id_b string")
-    stats = {}
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(df, _stats=stats).collect()
-    }
-    assert got == _oracle(edges)
+    stats = _run(spark, edges)
     assert stats["large_stars"] >= stats["small_stars"] > 0
 
 
-def test_pre_contract_same_output_dense_blocks(spark):
+def test_pre_contract_same_output_dense_blocks(spark, monkeypatch):
     """Partition-local union-find contraction must not change assignments
     on the shape it targets: dense per-block cliques (k members ->
     k(k-1)/2 co-located pairs) plus a high-diameter path plus random
-    noise, with duplicate and reversed edges thrown in."""
+    noise, with duplicate and reversed edges thrown in. Contraction runs
+    only in the star loop, so the bound is forced below the graph."""
     rng = random.Random(13)
     edges = []
     # three dense cliques (the blocking-generated shape)
@@ -129,49 +232,37 @@ def test_pre_contract_same_output_dense_blocks(spark):
     nodes = [f"n{i:03d}" for i in range(80)]
     edges += [tuple(sorted(rng.sample(nodes, 2))) for _ in range(60)]
     edges += [("A00", "A01"), ("A01", "A00")]  # dup + reversed
-    df = spark.createDataFrame(edges, "doc_id_a string, doc_id_b string")
-    plain = {
-        r["doc_id"]: r["cluster_id"] for r in connected_components(df).collect()
-    }
-    contracted = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(df, pre_contract=True).collect()
-    }
-    assert contracted == plain == _oracle(edges)
+    driver = _cc(spark, edges)
+    _force_star_loop(monkeypatch)
+    plain = _cc(spark, edges)
+    contracted = _cc(spark, edges, pre_contract=True)
+    assert contracted == plain == driver == _oracle(edges)
 
 
 def test_pre_contract_shrinks_partition_edges(spark):
     """The contraction itself: a clique of 40 members generated into few
     partitions must contract to <= 39 edges per partition containing it,
     and the contracted edge set must have the same transitive closure."""
-    from sneaky_data_matcher_spark.operators.clustering import (
-        _contract_partitions,
-    )
-
     members = [f"m{i:02d}" for i in range(40)]
     pairs = [(a, b) for a in members for b in members if a < b]  # 780
     df = spark.createDataFrame(pairs, "u string, v string").repartition(4)
-    out = _contract_partitions(df)
+    out = clustering._contract_partitions(df)
     rows = [(r["u"], r["v"]) for r in out.collect()]
     # each of the 4 partitions emits at most |V_p|-1 <= 39 edges
     assert len(rows) <= 4 * 39 < len(pairs)
     assert _oracle(rows) == _oracle(pairs)
 
 
-def test_pre_contract_long_ids(spark):
+def test_pre_contract_long_ids(spark, monkeypatch):
     """Integral doc_ids (the ER pipeline's id dtype) must ride through
     contraction with their type intact — the output schema is inherited
     from the input, not assumed string."""
+    _force_star_loop(monkeypatch)
     edges = [(i, i + 1) for i in range(30)] + [(100, 200), (200, 300)]
-    df = spark.createDataFrame(edges, "doc_id_a long, doc_id_b long")
-    plain = {
-        r["doc_id"]: r["cluster_id"] for r in connected_components(df).collect()
-    }
-    contracted = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(df, pre_contract=True).collect()
-    }
-    assert contracted == plain
+    schema = "doc_id_a long, doc_id_b long"
+    plain = _cc(spark, edges, schema)
+    contracted = _cc(spark, edges, schema, pre_contract=True)
+    assert contracted == plain == _oracle(edges)
     assert all(isinstance(k, int) for k in contracted)
 
 
