@@ -285,6 +285,17 @@ def adaptive_snm_pairs(
     )
 
 
+def census_hot_blocks(keys: DataFrame, max_block_size: int) -> DataFrame:
+    """Block-size census of a keys frame (pass, block_key, ...) -> the
+    over-cap blocks as (pass, block_key, block_size, n_salts), with
+    n_salts = ceil(block_size / max_block_size). Batch salt_keys and the
+    stream's streaming.incremental.hot_block_census share it."""
+    census = keys.groupBy("pass", "block_key").agg(F.count("*").alias("block_size"))
+    return census.where(F.col("block_size") > max_block_size).withColumn(
+        "n_salts", F.ceil(F.col("block_size") / F.lit(max_block_size)).cast("int")
+    )
+
+
 def salt_keys(
     keys: DataFrame,
     max_block_size: int = DEFAULT_MAX_BLOCK_SIZE,
@@ -311,18 +322,13 @@ def salt_keys(
     size never mattered to salting — recover it from the census if a metric
     needs it).
     """
-    census = keys.groupBy("pass", "block_key").agg(F.count("*").alias("block_size"))
     # pin the (tiny) hot slice so the count() and the join evaluate the
     # census subtree once; released by the ContextCleaner on GC
-    hot = census.where(F.col("block_size") > max_block_size).localCheckpoint(eager=True)
+    hot = census_hot_blocks(keys, max_block_size).localCheckpoint(eager=True)
     if hot.count() <= hot_broadcast_limit:
         hot = F.broadcast(hot)
     keyed = keys.join(hot, ["pass", "block_key"], "left")
-    n_salts = F.when(
-        F.col("block_size").isNotNull(),
-        F.ceil(F.col("block_size") / F.lit(max_block_size)).cast("int"),
-    ).otherwise(F.lit(1))
-    return keyed.withColumn("n_salts", n_salts).withColumn(
+    return keyed.withColumn("n_salts", F.coalesce("n_salts", F.lit(1))).withColumn(
         "salt", F.pmod(F.xxhash64("doc_id"), F.col("n_salts")).cast("int")
     )
 

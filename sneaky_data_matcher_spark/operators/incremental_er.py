@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.similarity import jaro_winkler, levenshtein_ratio
 from .blocking import blocking_keys
+from .scoring import token_set_jaccard
 
 DEFAULT_THRESHOLD = 0.8
 
@@ -73,11 +74,8 @@ def incremental_match(
     ).join(
         golden.select("cluster_id", F.col("rep_text").alias("tb")), "cluster_id"
     )
-    sa = F.array_distinct(F.split("ta", " "))
-    sb = F.array_distinct(F.split("tb", " "))
-    un = F.size(F.array_union(sa, sb))
-    tok_jac = F.when(un == 0, F.lit(1.0)).otherwise(
-        F.size(F.array_intersect(sa, sb)).cast("double") / un.cast("double")
+    tok_jac = token_set_jaccard(
+        F.array_distinct(F.split("ta", " ")), F.array_distinct(F.split("tb", " "))
     )
     score = F.round(
         0.4 * F.round(jaro_winkler(F.col("ta"), F.col("tb")), 6)

@@ -17,6 +17,10 @@ Scale notes:
   - the one Python-adjacent kernel (Jaro-Winkler) runs per Arrow batch
     inside DuckDB's vectorized C++ implementation; everything else is
     whole-stage-codegen'd.
+
+This is the only scorer: the streaming topology
+(streaming.incremental.streaming_er_topology) decodes each micro-batch's
+pairs into attach_payload's columns and scores them with score_pairs_fused.
 """
 
 from __future__ import annotations
@@ -59,27 +63,6 @@ def token_set_jaccard(a: Column, b: Column) -> Column:
     return F.when(un == 0, F.lit(1.0)).otherwise(
         inter.cast("double") / un.cast("double")
     )
-
-
-def weighted_score(w: dict[str, float]) -> Column:
-    """The score fold over the jw/lev_ratio/tok_jaccard/media_agree columns.
-    Batch and stream scoring share it: a different term order could
-    ulp-shift a boundary score between the two."""
-    return (
-        w["jw"] * F.col("jw")
-        + w["lev"] * F.col("lev_ratio")
-        + w["tok"] * F.col("tok_jaccard")
-        + w["med"] * F.col("media_agree")
-    )
-
-
-def band_prune(w: dict[str, float], band_threshold: float) -> tuple[Column, Column]:
-    """(cheap partial score, prunable) over the tok_jaccard/media_agree
-    columns. Sound upper bound: jw <= 1 and lev_ratio <= 1; the 1e-9 margin
-    makes pruning strictly conservative against float-order ulp noise, so
-    the match set is bit-identical to full evaluation."""
-    cheap = w["tok"] * F.col("tok_jaccard") + w["med"] * F.col("media_agree")
-    return cheap, cheap + F.lit(w["jw"] + w["lev"]) < F.lit(band_threshold - 1e-9)
 
 
 def attach_payload(
@@ -148,6 +131,12 @@ def score_pairs_fused(
     histograms) must score with band_threshold at their own floor — or
     None for the classic full evaluation (the default)."""
     w = weights or DEFAULT_WEIGHTS
+    full = (
+        w["jw"] * F.col("jw")
+        + w["lev"] * F.col("lev_ratio")
+        + w["tok"] * F.col("tok_jaccard")
+        + w["med"] * F.col("media_agree")
+    )
     tok_jac = token_set_jaccard(F.col("toks_a"), F.col("toks_b"))
     med = media_agreement(F.col("media_refs_a"), F.col("media_refs_b"))
     jw_c = jaro_winkler(F.col("pfx_a"), F.col("pfx_b"))
@@ -163,8 +152,12 @@ def score_pairs_fused(
             lev_c.alias("lev_ratio"),
             "tok_jaccard",
             "media_agree",
-        ).withColumn("score", weighted_score(w))
-    cheap, prunable = band_prune(w, band_threshold)
+        ).withColumn("score", full)
+    # Sound upper bound: jw <= 1 and lev_ratio <= 1; the 1e-9 margin makes
+    # pruning strictly conservative against float-order ulp noise, so the
+    # match set is bit-identical to full evaluation.
+    cheap = w["tok"] * F.col("tok_jaccard") + w["med"] * F.col("media_agree")
+    prunable = cheap + F.lit(w["jw"] + w["lev"]) < F.lit(band_threshold - 1e-9)
     # The two kernels are skipped differently (verified in the formatted
     # plan — PLANS.md "banded scoring"):
     #   - levenshtein is a native codegen expression, so the CASE below
@@ -190,9 +183,7 @@ def score_pairs_fused(
         "lev_ratio",
         "tok_jaccard",
         "media_agree",
-        F.when(F.col("jw").isNull(), cheap)
-        .otherwise(weighted_score(w))
-        .alias("score"),
+        F.when(F.col("jw").isNull(), cheap).otherwise(full).alias("score"),
     )
 
 

@@ -17,13 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.similarity import _jw_batch, levenshtein_ratio
-from ..operators.scoring import (
-    band_prune,
-    media_agreement,
-    token_set_jaccard,
-    weighted_score,
-)
+from ..operators import scoring
 from ..plans.pipeline import canonicalize_docs
 from ..sources.spans import SPAN_SCHEMA
 
@@ -267,76 +261,22 @@ def salt_keyed_stream(
 
 
 # ---------------------------------------------------------------------------
-# Streaming pair scoring (jw in mapInPandas; see streaming_er_topology for
-# why the batch scorer's scalar Arrow UDF cannot run downstream of the
-# state op)
+# Streaming pair payload (decoded per micro-batch for the batch scorer)
 # ---------------------------------------------------------------------------
 
 _PAYLOAD_SCHEMA = "pfx string, toks array<string>, media_refs array<string>"
-_JW_SCHEMA = (
-    "doc_id_a string, doc_id_b string, pfx_a string, pfx_b string, "
-    "tok_jaccard double, media_agree double, jw double"
-)
 
 
-def _score_pair_stream(
-    pairs: DataFrame, weights, band_threshold: float | None = None
-) -> DataFrame:
-    """pairs(doc_id_a, doc_id_b, text_a, text_b) where text_* is the JSON
-    SCORING payload {pfx, toks, media_refs} (trimmed per doc upstream by
-    scoring.scoring_payload, so the full doc_text never rides the block
-    state or the pair shuffle) -> (doc_id_a, doc_id_b, score).
-
-    The SAME formula as operators.scoring.score_pairs_fused, built from
-    its expressions: the payload is decoded with from_json, token jaccard,
-    media agreement, the band bound, levenshtein_ratio and the score fold
-    are the batch's native Spark expressions. Only jw runs in Python, in
-    one Arrow-batched mapInPandas stage through the batch's DuckDB kernel
-    (similarity._jw_batch). Levenshtein stays native: DuckDB's counts
-    UTF-8 bytes, Spark's counts code points, as does length(). Banded
-    mode keeps the batch contract: pruned rows get NULL jw arguments (an
-    O(1) kernel call), no levenshtein and the cheap partial score. Batch
-    equivalence is asserted in tests/test_streaming.py."""
-    w = dict(weights)
-    empty = F.array().cast("array<string>")
+def _decode_payload(pairs: DataFrame) -> DataFrame:
+    """pairs(doc_id_a, doc_id_b, text_a, text_b), text_* the JSON scoring
+    payload each doc carries through the block state -> attach_payload's
+    columns, ready for scoring.score_pairs_fused. A NULL field stays NULL,
+    as it does in batch."""
     sides = []
     for s in ("a", "b"):
         p = F.from_json(f"text_{s}", _PAYLOAD_SCHEMA)
-        sides += [
-            F.coalesce(p["pfx"], F.lit("")).alias(f"pfx_{s}"),
-            F.coalesce(p["toks"], empty).alias(f"toks_{s}"),
-            F.coalesce(p["media_refs"], empty).alias(f"media_refs_{s}"),
-        ]
-    terms = pairs.select("doc_id_a", "doc_id_b", *sides).select(
-        "doc_id_a",
-        "doc_id_b",
-        "pfx_a",
-        "pfx_b",
-        token_set_jaccard(F.col("toks_a"), F.col("toks_b")).alias("tok_jaccard"),
-        media_agreement(F.col("media_refs_a"), F.col("media_refs_b")).alias(
-            "media_agree"
-        ),
-    )
-    if band_threshold is not None:
-        cheap, prunable = band_prune(w, band_threshold)
-        terms = terms.withColumn("pfx_a", F.when(~prunable, F.col("pfx_a")))
-        terms = terms.withColumn("pfx_b", F.when(~prunable, F.col("pfx_b")))
-
-    def op(batches):  # pragma: no cover (runs on executors)
-        for pdf in batches:
-            yield pdf.assign(jw=_jw_batch(pdf["pfx_a"], pdf["pfx_b"]))
-
-    scored = terms.mapInPandas(op, schema=_JW_SCHEMA)
-    lev = levenshtein_ratio(F.col("pfx_a"), F.col("pfx_b"))
-    if band_threshold is None:
-        scored = scored.withColumn("lev_ratio", lev)
-        score = weighted_score(w)
-    else:
-        scored = scored.withColumn(
-            "jw", F.when(~prunable, F.col("jw"))
-        ).withColumn("lev_ratio", F.when(~prunable, lev))
-        score = F.when(F.col("jw").isNull(), cheap).otherwise(weighted_score(w))
-    return scored.select("doc_id_a", "doc_id_b", score.alias("score"))
+        sides += [p[c].alias(f"{c}_{s}") for c in ("pfx", "toks", "media_refs")]
+    return pairs.select("doc_id_a", "doc_id_b", *sides)
 
 
 # ---------------------------------------------------------------------------
@@ -395,41 +335,40 @@ def incremental_cc_update(io, edges: DataFrame, table: str = "clusters") -> Data
     return new_assign
 
 
-def incremental_cluster_stream(
-    matches_stream: DataFrame,
-    io,
-    table: str = "clusters",
-    checkpoint_dir: str | None = None,
-    output_mode: str = "append",
-):
-    """writeStream.foreachBatch wrapper over incremental_cc_update; returns
-    the started StreamingQuery (caller stops it / processAllAvailable).
-
-    output_mode defaults to "append": foreachBatch ignores the mode for the
-    sink itself, but Spark's UnsupportedOperationChecker still validates the
-    upstream plan against it — and the append-mode applyInPandasWithState in
-    streaming_er_topology is rejected under Update output mode
-    ("applyInPandasWithState in append mode is not supported with Update
-    output mode"). Append is valid for every upstream shape used here."""
-
-    def fb(batch_df, _batch_id):
-        incremental_cc_update(io, batch_df, table)
-
-    w = matches_stream.writeStream.foreachBatch(fb).outputMode(output_mode)
+def _start_foreach_batch(stream: DataFrame, fb, checkpoint_dir: str | None):
+    # Append: foreachBatch ignores the mode for its sink, but Spark still
+    # checks the upstream plan against it, and Update rejects the
+    # append-mode applyInPandasWithState of streaming_er_topology.
+    w = stream.writeStream.foreachBatch(fb).outputMode("append")
     if checkpoint_dir:
         w = w.option("checkpointLocation", checkpoint_dir)
     return w.start()
 
 
+def incremental_cluster_stream(
+    matches_stream: DataFrame,
+    io,
+    table: str = "clusters",
+    checkpoint_dir: str | None = None,
+):
+    """writeStream.foreachBatch wrapper over incremental_cc_update; returns
+    the started StreamingQuery (caller stops it / processAllAvailable)."""
+
+    def fb(batch_df, _batch_id):
+        incremental_cc_update(io, batch_df, table)
+
+    return _start_foreach_batch(matches_stream, fb, checkpoint_dir)
+
+
 def hot_block_census(canon_batch: DataFrame, cfg=None) -> DataFrame:
     """Batch-side hot-block census feeding salt_keyed_stream: blocking keys
     over a committed corpus snapshot -> the over-cap slice as (pass,
-    block_key, n_salts), the same ceil(size/cap) arithmetic as batch
-    salt_keys (operators/blocking.py:183-222). A stream cannot census
-    itself, so this runs out of band (e.g. per committed ingest batch) and
-    is broadcast onto the stream — hot blocks are by construction rare
-    (at most total_keys/cap rows), so the broadcast stays tiny."""
-    from ..operators.blocking import blocking_keys
+    block_key, n_salts), from the same blocking.census_hot_blocks as batch
+    salt_keys. A stream cannot census itself, so this runs out of band
+    (e.g. per committed ingest batch) and is broadcast onto the stream —
+    hot blocks are by construction rare (at most total_keys/cap rows), so
+    the broadcast stays tiny."""
+    from ..operators.blocking import blocking_keys, census_hot_blocks
     from ..plans.pipeline import PipelineConfig
 
     cfg = cfg or PipelineConfig()
@@ -439,14 +378,8 @@ def hot_block_census(canon_batch: DataFrame, cfg=None) -> DataFrame:
         prefix_chars=cfg.prefix_chars,
         sorted_tokens=cfg.sorted_tokens,
     )
-    census = keys.groupBy("pass", "block_key").agg(F.count("*").alias("block_size"))
-    return census.where(F.col("block_size") > cfg.max_block_size).select(
-        "pass",
-        "block_key",
-        F.ceil(F.col("block_size") / F.lit(cfg.max_block_size))
-        .cast("int")
-        .alias("n_salts"),
-    )
+    hot = census_hot_blocks(keys, cfg.max_block_size)
+    return hot.select("pass", "block_key", "n_salts")
 
 
 def streaming_er_topology(
@@ -461,9 +394,10 @@ def streaming_er_topology(
     stream: canonicalize -> multi-pass blocking keys (salted against a
     static hot-block census when provided) -> stateful incremental
     candidate pairs (per-block GroupState, payload-capped + TTL-evicted
-    per cfg) -> map-side scoring (same kernels/weights as batch) ->
-    threshold -> foreachBatch incremental connected components into the
-    committed `table`. Returns the started StreamingQuery.
+    per cfg) -> foreachBatch: decode the pair payload, score with the
+    batch scorer (scoring.score_pairs_fused, same weights and banding),
+    threshold, incremental connected components into the committed
+    `table`. Returns the started StreamingQuery.
 
     Scale-safety defaults (r3 — VERDICT r2 "what's wrong" #1): the state
     and pair shuffle carry the TRIMMED scoring payload (prefix + distinct
@@ -477,23 +411,27 @@ def streaming_er_topology(
     tests.
 
     The payload rides the block state as one JSON string column so the
-    generic pair-state schema stays flat; it is decoded per pair side
-    after emission. Cross-pass duplicate pairs are NOT deduped before
-    clustering — duplicate edges are a no-op to connected components
-    (batch-measured dup factor ~1.14; BENCH.md "Streaming dup-scoring
-    A/B" measured a per-batch dedup before scoring as no faster).
+    generic pair-state schema stays flat. Scoring runs inside
+    foreachBatch because Spark 4.1.2 cannot run a scalar pandas UDF (the
+    scorer's Jaro-Winkler) downstream of applyInPandasWithState within
+    the streaming plan (ClassCastException, GenericInternalRow ->
+    UnsafeRow); the micro-batch frame handed to foreachBatch scores like
+    any batch frame. Cross-pass
+    duplicate pairs are NOT deduped before clustering — duplicate edges
+    are a no-op to connected components (batch-measured dup factor ~1.14;
+    BENCH.md "Streaming dup-scoring A/B" measured a per-batch dedup before
+    scoring as no faster).
 
     With caps that never bind (small corpus, no hot blocks) this is
     exactly equivalent to the batch pipeline without salting (asserted in
     tests): the final clusters table equals batch non-singleton clusters
     over the same corpus."""
     from ..operators.blocking import blocking_keys
-    from ..operators.scoring import scoring_payload
     from ..plans.pipeline import PipelineConfig, canonicalize_docs
 
     cfg = cfg or PipelineConfig()
     canon = canonicalize_docs(doc_stream)
-    pay = scoring_payload(canon, cfg.score_prefix_len)
+    pay = scoring.scoring_payload(canon, cfg.score_prefix_len)
     payload = F.to_json(F.struct("pfx", "toks", "media_refs"))
     keyed = blocking_keys(
         pay.withColumn("payload", payload),
@@ -511,28 +449,14 @@ def streaming_er_topology(
         max_state_per_block=cfg.stream_max_state_per_block,
         state_ttl_ms=cfg.stream_state_ttl_ms,
     )
-    # jw runs in a mapInPandas stage rather than the batch path's scalar
-    # Arrow UDF: Spark 4.1.2's scalar
-    # EvalPython input queue casts its input rows to UnsafeRow, and rows
-    # emitted by the upstream applyInPandasWithState arrive as
-    # GenericInternalRow — any scalar pandas UDF downstream of the state op
-    # dies with a ClassCastException once a micro-batch actually emits
-    # pairs (an exchange doesn't help: the optimizer pushes the UDF's input
-    # projection back below it). mapInPandas tolerates generic rows, so jw
-    # runs there through the batch's DuckDB kernel; every other term and
-    # the fold are score_pairs_fused's native expressions — batch
-    # equivalence is asserted in tests.
-    scored = _score_pair_stream(
-        pairs,
-        cfg.weights,
-        band_threshold=cfg.threshold if cfg.banded_scoring else None,
-    )
-    matches = scored.where(F.col("score") >= cfg.threshold).select(
-        "doc_id_a", "doc_id_b"
-    )
-    return incremental_cluster_stream(
-        matches, io, table=table, checkpoint_dir=checkpoint_dir
-    )
+    band = cfg.threshold if cfg.banded_scoring else None
+
+    def fb(batch_df, _batch_id):
+        decoded = _decode_payload(batch_df)
+        scored = scoring.score_pairs_fused(decoded, cfg.weights, band)
+        incremental_cc_update(io, scoring.matches(scored, cfg.threshold), table)
+
+    return _start_foreach_batch(pairs, fb, checkpoint_dir)
 
 
 def streaming_dedup(

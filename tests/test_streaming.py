@@ -640,13 +640,16 @@ def test_streaming_er_topology_banded_matches_batch(spark):
 
 @pytest.mark.parametrize("band_threshold", [None, 0.62])
 def test_stream_scoring_matches_batch_on_non_ascii(spark, band_threshold):
-    """The stream scorer must give the batch scorer's exact scores on
-    accented and non-BMP prefixes, where a UTF-8 byte edit distance and a
-    code-point edit distance differ, in full and banded mode."""
+    """The stream's JSON payload, decoded, must give attach_payload's
+    columns value for value on accented, non-BMP and CJK text and empty
+    media, so the batch scorer gives the same scores on both, in full and
+    banded mode."""
     from sneaky_data_matcher_spark.operators.scoring import (
         DEFAULT_THRESHOLD,
         DEFAULT_WEIGHTS,
+        attach_payload,
         score_pairs_fused,
+        scoring_payload,
     )
 
     texts = [
@@ -656,41 +659,36 @@ def test_stream_scoring_matches_batch_on_non_ascii(spark, band_threshold):
         ("7", "8", "東京 タワー 展望台", "東京 タワ 展望台"),
         ("9", "10", "zebra quartz", "apple mango"),  # pruned when banded
     ]
-    rows = [
-        (a, b, ta, tb, sorted(set(ta.split())), sorted(set(tb.split())), [], [])
-        for a, b, ta, tb in texts
+    canon = spark.createDataFrame(
+        [(i, t, []) for a, b, ta, tb in texts for i, t in ((a, ta), (b, tb))],
+        "doc_id string, doc_text string, media_refs array<string>",
+    )
+    pairs = spark.createDataFrame(
+        [(a, b) for a, b, _, _ in texts], "doc_id_a string, doc_id_b string"
+    )
+    cols = [
+        "doc_id_a", "doc_id_b", "pfx_a", "toks_a", "media_refs_a",
+        "pfx_b", "toks_b", "media_refs_b",
     ]
-    payload = spark.createDataFrame(
-        rows,
-        "doc_id_a string, doc_id_b string, pfx_a string, pfx_b string, "
-        "toks_a array<string>, toks_b array<string>, "
-        "media_refs_a array<string>, media_refs_b array<string>",
+    batch = attach_payload(pairs, canon).select(*cols)
+    # the topology's encoding: one JSON payload per doc, carried as text_*
+    enc = scoring_payload(canon).select(
+        "doc_id", F.to_json(F.struct("pfx", "toks", "media_refs")).alias("t")
     )
-    batch = {
-        (r["doc_id_a"], r["doc_id_b"]): r["score"]
-        for r in score_pairs_fused(
-            payload, DEFAULT_WEIGHTS, band_threshold=band_threshold
-        ).collect()
-    }
-    pairs = payload.select(
-        "doc_id_a",
-        "doc_id_b",
-        *(
-            F.to_json(
-                F.struct(
-                    F.col(f"pfx_{s}").alias("pfx"),
-                    F.col(f"toks_{s}").alias("toks"),
-                    F.col(f"media_refs_{s}").alias("media_refs"),
-                )
-            ).alias(f"text_{s}")
-            for s in ("a", "b")
-        ),
-    )
-    stream = {
-        (r["doc_id_a"], r["doc_id_b"]): r["score"]
-        for r in S._score_pair_stream(
-            pairs, DEFAULT_WEIGHTS, band_threshold=band_threshold
-        ).collect()
-    }
-    assert stream == batch
-    assert batch[("1", "2")] >= DEFAULT_THRESHOLD
+    sides = [
+        enc.select(F.col("doc_id").alias(f"doc_id_{s}"), F.col("t").alias(f"text_{s}"))
+        for s in ("a", "b")
+    ]
+    decoded = S._decode_payload(pairs.join(sides[0], "doc_id_a").join(sides[1], "doc_id_b"))
+    assert decoded.columns == cols
+    assert sorted(decoded.collect()) == sorted(batch.collect())
+
+    def scores(df):
+        return {
+            (r["doc_id_a"], r["doc_id_b"]): r["score"]
+            for r in score_pairs_fused(df, DEFAULT_WEIGHTS, band_threshold).collect()
+        }
+
+    want = scores(batch)
+    assert scores(decoded) == want
+    assert want[("1", "2")] >= DEFAULT_THRESHOLD
