@@ -615,11 +615,7 @@ def _er_frames(spark, sf_dir):
     def build_pairs():
         from .operators import blocking
 
-        salted = (
-            keys.withColumn("salt", F.lit(0))
-            .withColumn("n_salts", F.lit(1))
-            .withColumn("block_size", F.lit(None).cast("long"))
-        )
+        salted = keys.withColumn("salt", F.lit(0))
         return blocking.candidate_pairs(salted, cache=False)
 
     pairs = _cached(spark, sf_dir, "er_pairs", build_pairs)
@@ -738,20 +734,11 @@ _ER_CLUSTERS_CTE = (
     f"WITH RECURSIVE {_ER_CLUSTERS_CTE} SELECT doc_id, cluster_id FROM clusters",
 )
 def er_clusters(spark, sf_dir):
-    from .operators.clustering import connected_components
+    from .operators.clustering import cluster_nodes
 
     def build():
         canon, _, _ = _er_frames(spark, sf_dir)
-        m = er_matches(spark, sf_dir)
-        comp = connected_components(m)
-        return (
-            canon.select("doc_id")
-            .join(comp, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
-            )
-        )
+        return cluster_nodes(canon, er_matches(spark, sf_dir))
 
     return _cached(spark, sf_dir, "er_clusters", build)
 
@@ -767,19 +754,10 @@ def er_clusters(spark, sf_dir):
     f"WITH RECURSIVE {_ER_CLUSTERS_CTE} SELECT doc_id, cluster_id FROM clusters",
 )
 def er_clusters_contracted(spark, sf_dir):
-    from .operators.clustering import connected_components
+    from .operators.clustering import cluster_nodes
 
     canon, _, _ = _er_frames(spark, sf_dir)
-    m = er_matches(spark, sf_dir)
-    comp = connected_components(m, pre_contract=True)
-    return (
-        canon.select("doc_id")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
-        )
-    )
+    return cluster_nodes(canon, er_matches(spark, sf_dir), pre_contract=True)
 
 
 # MinHash-LSH near-dup pairs: the LSH path is hash-family specific (Spark
@@ -5072,7 +5050,7 @@ def _incr_er_sql() -> str:
 
 @_q("er_incremental_match", _incr_er_sql())
 def er_incremental_match_q(spark, sf_dir):
-    from .operators.clustering import connected_components, golden_records
+    from .operators.clustering import cluster_nodes, golden_records
     from .operators.incremental_er import incremental_match
 
     def build():
@@ -5089,11 +5067,7 @@ def er_incremental_match_q(spark, sf_dir):
         bkeys = _text_keys(base)
         from .operators import blocking
 
-        salted = (
-            bkeys.withColumn("salt", F.lit(0))
-            .withColumn("n_salts", F.lit(1))
-            .withColumn("block_size", F.lit(None).cast("long"))
-        )
+        salted = bkeys.withColumn("salt", F.lit(0))
         pairs = blocking.candidate_pairs(salted, cache=False)
         a = base.select(F.col("doc_id").alias("doc_id_a"), F.col("doc_text").alias("ta"))
         b = base.select(F.col("doc_id").alias("doc_id_b"), F.col("doc_text").alias("tb"))
@@ -5110,12 +5084,7 @@ def er_incremental_match_q(spark, sf_dir):
             + 0.4 * tok_jac
         )
         edges = t.where(score >= 0.8).select("doc_id_a", "doc_id_b")
-        comp = connected_components(edges)
-        clusters = (
-            base.select("doc_id")
-            .join(comp, "doc_id", "left")
-            .select("doc_id", F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"))
-        )
+        clusters = cluster_nodes(base, edges)
         gold = golden_records(clusters, base).select(
             "cluster_id", "rep_text"
         )
@@ -5385,7 +5354,7 @@ _ER_STRICT_COND = "0.4*jw + 0.2*lev_ratio + 0.4*tok_jaccard >= 0.85"
     "FROM c1 JOIN c2 USING (doc_id) GROUP BY cluster_lo",
 )
 def er_threshold_stability_q(spark, sf_dir):
-    from .operators.clustering import connected_components
+    from .operators.clustering import cluster_nodes
 
     s = _er_scored_frame(spark, sf_dir)
     score = (
@@ -5396,10 +5365,7 @@ def er_threshold_stability_q(spark, sf_dir):
 
     def clusters_at(cond, name):
         edges = s.where(cond).select("doc_id_a", "doc_id_b")
-        comp = connected_components(edges)
-        return ids.join(comp, "doc_id", "left").select(
-            "doc_id", F.coalesce("cluster_id", F.col("doc_id")).alias(name)
-        )
+        return cluster_nodes(ids, edges).withColumnRenamed("cluster_id", name)
 
     lo = clusters_at(score >= 0.8, "cluster_lo")
     hi = clusters_at(score >= 0.85, "cluster_hi")
@@ -6374,7 +6340,7 @@ def er_edge_support_q(spark, sf_dir):
     "SELECT a AS doc_id, min(b) AS cluster_id FROM kreach GROUP BY a",
 )
 def er_repaired_clusters_q(spark, sf_dir):
-    from .operators.clustering import connected_components
+    from .operators.clustering import cluster_nodes
     from .operators.graphstats import edge_support
 
     edges = _er_match_edges_scored(spark, sf_dir)
@@ -6385,14 +6351,7 @@ def er_repaired_clusters_q(spark, sf_dir):
         .select(F.col("u").alias("doc_id_a"), F.col("v").alias("doc_id_b"))
     )
     canon, _, _ = _er_frames(spark, sf_dir)
-    comp = connected_components(kept)
-    return (
-        canon.select("doc_id")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id", F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id")
-        )
-    )
+    return cluster_nodes(canon, kept)
 
 
 # Soft TF-IDF (Cohen-Ravikumar-Fienberg 2003) on the ER candidate pairs:
@@ -7463,7 +7422,7 @@ _ER_PREV_CUR_CTE = (
 
 def _er_prev_cur(spark, sf_dir):
     """Spark side of the simulated prev/cur assignment pair (cached)."""
-    from .operators.clustering import connected_components
+    from .operators.clustering import cluster_nodes
 
     s = _er_scored_frame(spark, sf_dir)
     score = (
@@ -7477,28 +7436,13 @@ def _er_prev_cur(spark, sf_dir):
             & (F.col("doc_id_a") % 2 == 0)
             & (F.col("doc_id_b") % 2 == 0)
         ).select("doc_id_a", "doc_id_b")
-        comp = connected_components(edges)
-        return (
-            canon.where(F.col("doc_id") % 2 == 0)
-            .select("doc_id")
-            .join(comp, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("cluster_id", F.col("doc_id")).alias("entity_id"),
-            )
-        )
+        return cluster_nodes(
+            canon.where(F.col("doc_id") % 2 == 0), edges
+        ).withColumnRenamed("cluster_id", "entity_id")
 
     def build_cur():
         edges = s.where(score >= 0.85).select("doc_id_a", "doc_id_b")
-        comp = connected_components(edges)
-        return (
-            canon.select("doc_id")
-            .join(comp, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
-            )
-        )
+        return cluster_nodes(canon, edges)
 
     prev = _cached(spark, sf_dir, "er_prev_assign", build_prev)
     cur = _cached(spark, sf_dir, "er_cur_assign", build_cur)
@@ -7916,7 +7860,7 @@ _FORGET_COND = "doc_id % 37 <> 0"
 )
 def er_forget_audit_q(spark, sf_dir):
     from .operators import entity_ids
-    from .operators.clustering import connected_components
+    from .operators.clustering import cluster_nodes
 
     canon, _, _ = _er_frames(spark, sf_dir)
     prev = er_clusters(spark, sf_dir).select(
@@ -7927,16 +7871,7 @@ def er_forget_audit_q(spark, sf_dir):
         m = er_matches(spark, sf_dir).where(
             (F.col("doc_id_a") % 37 != 0) & (F.col("doc_id_b") % 37 != 0)
         )
-        comp = connected_components(m)
-        return (
-            canon.where(F.col("doc_id") % 37 != 0)
-            .select("doc_id")
-            .join(comp, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
-            )
-        )
+        return cluster_nodes(canon.where(F.col("doc_id") % 37 != 0), m)
 
     cur = _cached(spark, sf_dir, "er_forget_assign", build_cur)
     return entity_ids.cluster_churn(prev, cur)
@@ -8346,7 +8281,7 @@ _FUNNEL_SQL = (
 @_q("corpus_funnel", _FUNNEL_SQL)
 def corpus_funnel_q(spark, sf_dir):
     from .operators import decontam, dedup
-    from .operators.clustering import connected_components
+    from .operators.clustering import cluster_nodes
     from .operators.sampling import cluster_split
 
     d = _docs(spark, sf_dir)
@@ -8354,14 +8289,7 @@ def corpus_funnel_q(spark, sf_dir):
     fp = d.select("doc_id", TS.fingerprint(F.col("text")).alias("f"))
     s2 = fp.groupBy("f").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
     pairs = dedup.minhash_dedup(d, "doc_id", "text", threshold=0.7)
-    comp = connected_components(pairs.select("doc_id_a", "doc_id_b"))
-    cl = (
-        d.select("doc_id")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id", F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id")
-        )
-    )
+    cl = cluster_nodes(d, pairs.select("doc_id_a", "doc_id_b"))
     s3 = (
         s2.join(cl, "doc_id")
         .groupBy("cluster_id")

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ordered import running_sum
+
 # Defaults chosen so a block never yields more than ~max_block_size * cap
 # pairs per member; production values are config, these are sane for tests.
 DEFAULT_MAX_BLOCK_SIZE = 50
@@ -110,50 +112,19 @@ def sorted_neighborhood_pairs(
     globally sort docs by a key, slide a ``window``-row window, emit every
     pair co-resident in some window -> distinct (doc_id_a < doc_id_b).
 
-    Spark-first shape with an EXACT global rank and no single reducer:
-    ``repartitionByRange`` on the key keeps partitions key-ordered, a
-    per-partition ``row_number`` gives local ranks, and the per-partition
-    row counts (one tiny row per partition, collected to the driver and
-    broadcast back) turn them into global ranks. Pairs within ``window``
-    of each other in global rank necessarily land in the same or adjacent
+    Spark-first shape with an EXACT global rank and no single reducer: the
+    rank is ordered.running_sum of 1 over (key, doc_id), with
+    ``num_partitions`` range partitions. Pairs within ``window`` of each
+    other in global rank necessarily land in the same or adjacent
     ``window``-sized rank buckets, so a bucket/bucket+1 self-join finds
     exactly the sliding-window pairs — partition seams and empty/short
-    partitions included (the earlier tail×head seam heuristic broke on
-    both; see tests which force multi-partition runs).
+    partitions included (tests force multi-partition runs).
     """
-    from pyspark.sql import Window as W
-
     key = sort_key if sort_key is not None else F.col("doc_text")
     base = canon.select("doc_id", key.alias("snk")).where(
         F.col("snk").isNotNull() & (F.col("snk") != "")
     )
-    base = (
-        base.repartitionByRange(num_partitions, "snk", "doc_id")
-        if num_partitions
-        else base.repartitionByRange("snk", "doc_id")
-    )
-    ranked = base.withColumn("pid", F.spark_partition_id()).withColumn(
-        "lrank",
-        F.row_number().over(W.partitionBy("pid").orderBy("snk", "doc_id")),
-    )
-    # pin: the frame is read twice (offsets + join) and pid/lrank must be
-    # identical across both evaluations
-    ranked = ranked.localCheckpoint(eager=True)
-    # tiny driver-side cumulative offsets: one row per partition
-    counts = sorted(
-        (r["pid"], r["n"])
-        for r in ranked.groupBy("pid").agg(F.count("*").alias("n")).collect()
-    )
-    offsets, acc = {}, 0
-    for pid, n in counts:
-        offsets[pid] = acc
-        acc += n
-    off_df = ranked.sparkSession.createDataFrame(
-        [(p, o) for p, o in offsets.items()], "pid int, off long"
-    )
-    g = ranked.join(F.broadcast(off_df), "pid").select(
-        "doc_id", (F.col("lrank") + F.col("off")).alias("grank")
-    )
+    g, _ = running_sum(base, ["snk", "doc_id"], F.lit(1), "grank", num_partitions)
     bucket = F.floor((F.col("grank") - 1) / window)
     left = g.select(
         F.col("doc_id").alias("doc_id_a"),
@@ -203,23 +174,17 @@ def adaptive_snm_pairs(
     a segment is the global sort order), bounding the quadratic pair mass
     of any one segment exactly like max_block_size bounds hash blocks.
 
-    Scale shape: one global rank (range-partition + per-partition
-    row_number + tiny driver offsets — the sorted_neighborhood_pairs
-    machinery), one rank-adjacent equi-join for the boundary flags, one
-    ordered cumulative sum for segment ids (same range-partition trick:
-    per-partition cumsum + driver-side partition-total offsets; flags are
-    0/1 longs, nothing wide crosses a shuffle), one window by segment for
-    the sub-split, one (segment, sub) self-join for pairs. No
+    Scale shape: one global rank and one segment id, both
+    ordered.running_sum (of 1 over (key, doc_id), then of the 0/1 boundary
+    flags over the rank; nothing wide crosses a shuffle), one
+    rank-adjacent equi-join for the boundary flags, one window by segment
+    for the sub-split, one (segment, sub) self-join for pairs. No
     single-partition window anywhere."""
-    from pyspark.sql import Window as W
-
-    from .metablocking import _global_rank
-
     key = sort_key if sort_key is not None else F.col("doc_text")
     base = canon.select("doc_id", key.alias("snk")).where(
         F.col("snk").isNotNull() & (F.col("snk") != "")
     )
-    ranked, _n = _global_rank(base, [F.col("snk"), F.col("doc_id")])
+    ranked, _ = running_sum(base, ["snk", "doc_id"], F.lit(1), "grank")
 
     prev = ranked.select(
         (F.col("grank") + 1).alias("grank"),
@@ -237,33 +202,7 @@ def adaptive_snm_pairs(
         .otherwise(F.lit(0))
         .alias("flag"),
     )
-
-    # ordered cumulative sum of boundary flags -> segment id, without a
-    # single-partition window: range-partition on grank (keeps order),
-    # local cumsum per partition, then add the driver-side prefix totals
-    fr = flagged.repartitionByRange("grank").withColumn(
-        "pid", F.spark_partition_id()
-    )
-    fr = fr.withColumn(
-        "lcum",
-        F.sum("flag").over(
-            W.partitionBy("pid").orderBy("grank").rowsBetween(W.unboundedPreceding, 0)
-        ),
-    ).localCheckpoint(eager=True)  # pid/lcum pinned across the two reads
-    totals = sorted(
-        (r["pid"], r["s"])
-        for r in fr.groupBy("pid").agg(F.coalesce(F.sum("flag"), F.lit(0)).alias("s")).collect()
-    )
-    offs, acc = {}, 0
-    for pid, s in totals:
-        offs[pid] = acc
-        acc += s
-    off_df = fr.sparkSession.createDataFrame(
-        [(p, o) for p, o in offs.items()], "pid int, soff long"
-    )
-    seg = fr.join(F.broadcast(off_df), "pid").select(
-        "doc_id", "grank", (F.col("lcum") + F.col("soff")).alias("seg")
-    )
+    seg, _ = running_sum(flagged, ["grank"], F.col("flag"), "seg")
 
     sub = seg.withColumn(
         "sub",

@@ -178,9 +178,9 @@ def connected_components(
     """matches(doc_id_a, doc_id_b, ...) -> (doc_id, cluster_id).
 
     cluster_id = min doc_id of the component. Docs absent from `matches`
-    are not emitted — callers left-join and coalesce to doc_id for
-    singleton clusters (see pipeline.assign_clusters). Edges with a NULL
-    endpoint are ignored, and so is a node whose only edges are self-loops.
+    are not emitted — cluster_nodes adds them as singleton clusters. Edges
+    with a NULL endpoint are ignored, and so is a node whose only edges are
+    self-loops.
 
     Driver pass: the edges are first collected with one bounded Arrow
     action (at most _DRIVER_MAX_EDGES + 1 rows). If they all came back,
@@ -264,6 +264,26 @@ def connected_components(
     )
 
 
+def cluster_nodes(
+    nodes: DataFrame,
+    matches: DataFrame,
+    max_iterations: int = 25,
+    pre_contract: bool = False,
+) -> DataFrame:
+    """nodes(doc_id, ...) + matches(doc_id_a, doc_id_b, ...) ->
+    (doc_id, cluster_id) for every node: the min doc_id of its component
+    (connected_components), or its own doc_id when no match touches it."""
+    comp = connected_components(matches, max_iterations, pre_contract=pre_contract)
+    return (
+        nodes.select("doc_id")
+        .join(comp, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
+        )
+    )
+
+
 def refine_clusters(
     assign: DataFrame,
     scored_pairs: DataFrame,
@@ -310,14 +330,9 @@ def refine_clusters(
         "doc_id_b",
         "left_semi",
     )
-    sub = connected_components(strong)
-    refined = (
-        bigm.join(sub.withColumnRenamed("doc_id", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
-        )
-    )
+    refined = cluster_nodes(
+        bigm.withColumnRenamed(id_col, "doc_id"), strong
+    ).withColumnRenamed("doc_id", id_col)
     keep = assign.join(F.broadcast(big), "cluster_id", "left_anti")
     return keep.select(id_col, "cluster_id").unionByName(refined)
 

@@ -38,16 +38,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .blocking import census_hot_blocks
+from .ordered import running_sum
+
 
 def block_purge(
     keys: DataFrame, max_block_size: int, hot_broadcast_limit: int = 1_000_000
 ) -> DataFrame:
     """Drop blocks larger than `max_block_size` entirely (classic block
     purging: such keys are stop-words — their pair mass is quadratic
-    noise). Census + broadcast LEFT ANTI join of the hot slice; falls
-    back to a shuffle anti-join if the hot slice is degenerate-huge."""
-    census = keys.groupBy("pass", "block_key").agg(F.count("*").alias("sz"))
-    hot = census.where(F.col("sz") > max_block_size).select("pass", "block_key")
+    noise). salt_keys' census (blocking.census_hot_blocks) + broadcast
+    LEFT ANTI join of the hot slice; falls back to a shuffle anti-join if
+    the hot slice is degenerate-huge."""
+    hot = census_hot_blocks(keys, max_block_size).select("pass", "block_key")
     hot = hot.localCheckpoint(eager=True)
     if hot.count() <= hot_broadcast_limit:
         hot = F.broadcast(hot)
@@ -87,38 +90,6 @@ def block_filter(keys: DataFrame, num: int = 1, den: int = 2) -> DataFrame:
     )
 
 
-def _global_rank(df: DataFrame, sort_cols) -> tuple[DataFrame, int]:
-    """Total-order global rank WITHOUT a single-partition window: range-
-    repartition on the sort key, rank within each partition, then add
-    driver-side cumulative offsets (one tiny row per partition — the
-    same pattern as blocking.sorted_neighborhood_pairs). Returns the
-    frame with a `grank` column plus the total row count."""
-    base = df.repartitionByRange(*sort_cols)
-    ranked = base.withColumn("pid", F.spark_partition_id()).withColumn(
-        "lrank", F.row_number().over(Window.partitionBy("pid").orderBy(*sort_cols))
-    )
-    # pinned: pid/lrank must be identical across the offsets read and the
-    # final projection
-    ranked = ranked.localCheckpoint(eager=True)
-    counts = sorted(
-        (r["pid"], r["n"])
-        for r in ranked.groupBy("pid").agg(F.count("*").alias("n")).collect()
-    )
-    offsets, acc = {}, 0
-    for pid, n in counts:
-        offsets[pid] = acc
-        acc += n
-    off_df = ranked.sparkSession.createDataFrame(
-        [(p, o) for p, o in offsets.items()], "pid int, off long"
-    )
-    out = (
-        ranked.join(F.broadcast(off_df), "pid")
-        .withColumn("grank", F.col("lrank") + F.col("off"))
-        .drop("pid", "lrank", "off")
-    )
-    return out, acc
-
-
 def progressive_decile_recall(
     edges: DataFrame, matches: DataFrame, n_buckets: int = 10
 ) -> DataFrame:
@@ -133,13 +104,15 @@ def progressive_decile_recall(
     recall. A steep curve certifies the weight function: most matches
     surface in the first slices, so a budget-bound run can stop early.
 
-    Scale shape: the global rank uses the range-partition + offset
-    pattern (no single-partition window); bucket ids are exact integer
-    ceil(grank*k/n); the per-bucket rollup is k rows, and the final
-    cumulative window runs on those k rows only."""
-    ranked, n = _global_rank(
+    Scale shape: the global rank is ordered.running_sum of 1 over
+    (jaccard desc, doc_id_a, doc_id_b) (no single-partition window);
+    bucket ids are exact integer ceil(grank*k/n); the per-bucket rollup is
+    k rows, and the final cumulative window runs on those k rows only."""
+    ranked, n = running_sum(
         edges.select("doc_id_a", "doc_id_b", "jaccard"),
-        [F.col("jaccard").desc(), F.col("doc_id_a"), F.col("doc_id_b")],
+        [F.col("jaccard").desc(), "doc_id_a", "doc_id_b"],
+        F.lit(1),
+        "grank",
     )
     # denominator rides along lazily as a broadcast one-row aggregate
     # (same pattern as wep_prune) instead of an eager matches.count() at

@@ -7,12 +7,9 @@ whose tokens straddle a boundary spans multiple chunks. This is the
 pipelines (no padding waste, deterministic layout), re-expressed as
 DataFrame ops.
 
-Scale shape: the global token-offset (a prefix sum over the whole corpus)
-is NOT a single-partition window — it's the same two-phase pattern as
-sorted-neighborhood blocking (blocking.py): a range-partitioned sort by
-doc_id, a per-partition running sum inside each partition, then one tiny
-driver-side frame (one row per partition) of partition totals broadcast
-back as offsets. At 100 TB that collect is a few thousand longs.
+Scale shape: the global token offset (a prefix sum over the whole corpus)
+is ordered.running_sum of token counts in doc_id order — range partitions
+plus driver-side partition offsets, NOT a single-partition window.
 
 Generalizes the reference's fixed export paging (SearchService.java:233-259
 pages of 50 rows) to token-budgeted chunking.
@@ -20,10 +17,11 @@ pages of 50 rows) to token-budgeted chunking.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textstats import token_count
+from .ordered import running_sum
 
 
 def global_token_offsets(
@@ -40,34 +38,11 @@ def global_token_offsets(
         F.col(id_col).alias("doc_id"),
         token_count(F.col(text_col)).cast("long").alias("n_tokens"),
     )
-    t = (
-        t.repartitionByRange(num_partitions, "doc_id")
-        if num_partitions
-        else t.repartitionByRange("doc_id")
-    )
-    ranked = t.withColumn("pid", F.spark_partition_id()).withColumn(
-        "lsum",
-        F.sum("n_tokens").over(
-            Window.partitionBy("pid")
-            .orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    # pin: read twice (totals + join) — pid/lsum must not be recomputed
-    ranked = ranked.localCheckpoint(eager=True)
-    totals = sorted(
-        (r["pid"], r["tot"])
-        for r in ranked.groupBy("pid").agg(F.sum("n_tokens").alias("tot")).collect()
-    )
-    offsets, acc = [], 0
-    for pid, tot in totals:
-        offsets.append((pid, acc))
-        acc += int(tot or 0)
-    off_df = ranked.sparkSession.createDataFrame(offsets, "pid int, off long")
-    return ranked.join(F.broadcast(off_df), "pid").select(
+    out, _ = running_sum(t, ["doc_id"], F.col("n_tokens"), "tok_end", num_partitions)
+    return out.select(
         "doc_id",
         "n_tokens",
-        (F.col("off") + F.col("lsum") - F.col("n_tokens")).alias("tok_start"),
+        (F.col("tok_end") - F.col("n_tokens")).alias("tok_start"),
     )
 
 

@@ -1,9 +1,9 @@
 """End-to-end record-linkage pipeline: canonicalize → block → score → cluster.
 
-Five pure DataFrame→DataFrame stages, each independently checkpointable to a
+Four pure DataFrame→DataFrame stages, each independently checkpointable to a
 table (plans/runs.py handles persistence/resume/metrics). This module is the
-logical plan only — no I/O — so the same code runs in tests (in-memory), in
-bench.py (parquet stages), and on a real cluster (Iceberg stages).
+logical plan only — no I/O — so the same code runs in tests and bench.py
+(stages persisted in memory) and on a real cluster (Iceberg stages).
 
 Reference lineage: the whole file generalizes matchAndExport
 (services/SearchService.java:104-199): canonicalization = P1-P6, blocking =
@@ -116,11 +116,7 @@ def build_candidate_pairs(canon: DataFrame, cfg: PipelineConfig) -> DataFrame:
     if cfg.salting_enabled:
         salted = blocking.salt_keys(keys, cfg.max_block_size)
     else:
-        salted = (
-            keys.withColumn("salt", F.lit(0))
-            .withColumn("n_salts", F.lit(1))
-            .withColumn("block_size", F.lit(None).cast("long"))
-        )
+        salted = keys.withColumn("salt", F.lit(0))
     return blocking.candidate_pairs(salted)
 
 
@@ -133,16 +129,8 @@ def score_candidates(pairs: DataFrame, canon: DataFrame, cfg: PipelineConfig) ->
 def assign_clusters(scored: DataFrame, canon: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """(scored, canon) -> (doc_id, cluster_id); singletons get their own id."""
     m = scoring.matches(scored, cfg.threshold)
-    comp = clustering.connected_components(
-        m, cfg.cc_max_iterations, pre_contract=cfg.cc_pre_contract
-    )
-    return (
-        canon.select("doc_id")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
-        )
+    return clustering.cluster_nodes(
+        canon, m, cfg.cc_max_iterations, pre_contract=cfg.cc_pre_contract
     )
 
 

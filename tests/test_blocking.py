@@ -151,9 +151,10 @@ def _adaptive_oracle(rows, num=1, den=2, max_segment=50):
 
 def test_adaptive_snm_matches_single_node_oracle(spark, synth_corpus):
     """Adaptive SNM vs a single-node boundary-cut oracle, including a
-    sub-split stress (max_segment=3 forces splits inside duplicate runs)
-    and a multi-partition run to cross partition seams in both the
-    global rank and the ordered cumulative sum."""
+    sub-split stress (max_segment=3 forces splits inside duplicate runs).
+    The range partitioning is left to Spark, which coalesces this corpus
+    into one partition; test_running_sum_matches_python_cumsum crosses
+    the partition seams of the rank and the segment sum."""
     canon = _canon(synth_corpus)
     rows = [
         (r["doc_text"], r["doc_id"]) for r in canon.collect() if r["doc_text"]

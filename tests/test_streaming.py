@@ -98,11 +98,7 @@ def test_streaming_candidate_pairs_match_batch(spark):
 
     # batch reference: unsalted candidate pairs
     keys = blocking.blocking_keys(canon)
-    salted = (
-        keys.withColumn("salt", F.lit(0))
-        .withColumn("n_salts", F.lit(1))
-        .withColumn("block_size", F.lit(None).cast("long"))
-    )
+    salted = keys.withColumn("salt", F.lit(0))
     want = {
         (r["doc_id_a"], r["doc_id_b"])
         for r in blocking.candidate_pairs(salted, cache=False).collect()
