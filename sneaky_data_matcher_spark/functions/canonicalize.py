@@ -181,13 +181,6 @@ def map_and_concat(cols: list[Column], source_names: list[str], transformations:
 # DuckDB SQL twins — return SQL expression strings over a column expression.
 # ---------------------------------------------------------------------------
 
-def java_trim_sql(expr: str) -> str:
-    return (
-        f"regexp_replace(regexp_replace({expr}, '^[\\x00-\\x20]+', ''),"
-        f" '[\\x00-\\x20]+$', '')"
-    )
-
-
 def nrm_sql(expr: str) -> str:
     strip = "[\\x00-\\x20''\"]"  # duckdb escapes ' by doubling
     tok = (
@@ -195,10 +188,6 @@ def nrm_sql(expr: str) -> str:
         f" t -> regexp_replace(regexp_replace(t, '^{strip}+', ''), '{strip}+$', ''))"
     )
     return f"array_to_string(list_filter({tok}, t -> t <> ''), ' ')"
-
-
-def tlc_nrm_sql(expr: str) -> str:
-    return nrm_sql(f"lower({expr})")
 
 
 def phone_rule_sql(expr: str) -> str:

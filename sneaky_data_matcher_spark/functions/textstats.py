@@ -53,17 +53,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def word_token_count(col: Column) -> Column:
-    """BPE-ish regex token count: words, numbers, and single punctuation
-    marks each count as one token (approximates subword tokenizer load)."""
-    return F.size(
-        F.filter(
-            F.split(col, r"(?=[^A-Za-z0-9\s])|\s+"),
-            lambda t: t != F.lit(""),
-        )
-    )
-
-
 def stopword_ratio(col: Column, lang: str = "en") -> Column:
     toks = tokens(F.lower(col))
     sw = F.array(*[F.lit(w) for w in _LANG_STOPWORDS[lang]])
@@ -117,12 +106,6 @@ def punct_ratio(col: Column) -> Column:
     n = F.length(col)
     n_punct = F.length(F.regexp_replace(col, r"[^!-/:-@\[-`{-~]", ""))
     return F.when(n == 0, F.lit(0.0)).otherwise(n_punct.cast("double") / n.cast("double"))
-
-
-def alpha_ratio(col: Column) -> Column:
-    n = F.length(col)
-    n_alpha = F.length(F.regexp_replace(col, r"[^A-Za-z]", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(n_alpha.cast("double") / n.cast("double"))
 
 
 def mean_word_length(col: Column) -> Column:

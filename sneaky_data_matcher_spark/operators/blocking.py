@@ -235,10 +235,22 @@ def census_hot_blocks(keys: DataFrame, max_block_size: int) -> DataFrame:
     )
 
 
+_HOT_BROADCAST_LIMIT = 1_000_000
+
+
+def _hot_slice(keys: DataFrame, max_block_size: int) -> DataFrame:
+    """census_hot_blocks pinned for a join against ``keys``: broadcast
+    unless the slice is unexpectedly huge (> _HOT_BROADCAST_LIMIT rows —
+    degenerate key choice), where the caller's join falls back to a
+    shuffle rather than OOM the driver. Pinned so the count() and the
+    join evaluate the census subtree once; released by the
+    ContextCleaner on GC."""
+    hot = census_hot_blocks(keys, max_block_size).localCheckpoint(eager=True)
+    return F.broadcast(hot) if hot.count() <= _HOT_BROADCAST_LIMIT else hot
+
+
 def salt_keys(
-    keys: DataFrame,
-    max_block_size: int = DEFAULT_MAX_BLOCK_SIZE,
-    hot_broadcast_limit: int = 1_000_000,
+    keys: DataFrame, max_block_size: int = DEFAULT_MAX_BLOCK_SIZE
 ) -> DataFrame:
     """Census block sizes, split blocks over `max_block_size` into
     ceil(size/max_block_size) deterministic salted sub-blocks.
@@ -253,19 +265,13 @@ def salt_keys(
     practice a tiny skewed tail). So instead of shuffle-joining the full
     keys frame against the full census, broadcast just the hot slice and
     left-join map-side: cold keys (the overwhelming majority) never
-    shuffle here at all. If the hot slice is unexpectedly huge
-    (> hot_broadcast_limit rows — degenerate key choice), fall back to the
-    shuffle join rather than OOM the driver.
+    shuffle here at all (see _hot_slice).
 
     block_size is reported for hot blocks; cold blocks carry null (their
     size never mattered to salting — recover it from the census if a metric
     needs it).
     """
-    # pin the (tiny) hot slice so the count() and the join evaluate the
-    # census subtree once; released by the ContextCleaner on GC
-    hot = census_hot_blocks(keys, max_block_size).localCheckpoint(eager=True)
-    if hot.count() <= hot_broadcast_limit:
-        hot = F.broadcast(hot)
+    hot = _hot_slice(keys, max_block_size)
     keyed = keys.join(hot, ["pass", "block_key"], "left")
     return keyed.withColumn("n_salts", F.coalesce("n_salts", F.lit(1))).withColumn(
         "salt", F.pmod(F.xxhash64("doc_id"), F.col("n_salts")).cast("int")

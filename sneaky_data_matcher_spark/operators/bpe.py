@@ -130,21 +130,6 @@ def bpe_encode(
 # --- DuckDB twin -----------------------------------------------------------
 
 
-def _apply_merge_sql(sym: str, l: str, r: str) -> str:
-    """list_reduce fold mirroring :func:`_apply_merge`; elements are
-    wrapped as single-item lists so the accumulator type matches (the
-    same prepend-init trick as the simhash twin)."""
-    esc_l, esc_r = l.replace("'", "''"), r.replace("'", "''")
-    esc_m = (l + r).replace("'", "''")
-    return (
-        f"list_reduce(list_prepend([], list_transform({sym}, s -> [s])), "
-        "(acc, x) -> CASE WHEN len(acc) > 0 AND acc[-1] = "
-        f"'{esc_l}' AND x[1] = '{esc_r}' "
-        f"THEN list_append(acc[:len(acc)-1], '{esc_m}') "
-        "ELSE list_concat(acc, x) END)"
-    )
-
-
 def bpe_ctes(n_merges: int, text_source: str = "documents") -> str:
     """Unrolled-round training CTEs: word census ``w``, per-round vocab
     ``v0..v<n>`` (carrying word, freq, sym), per-round winning pair

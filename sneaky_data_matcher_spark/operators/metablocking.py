@@ -38,22 +38,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .blocking import census_hot_blocks
+from .blocking import _hot_slice
 from .ordered import running_sum
 
 
-def block_purge(
-    keys: DataFrame, max_block_size: int, hot_broadcast_limit: int = 1_000_000
-) -> DataFrame:
+def block_purge(keys: DataFrame, max_block_size: int) -> DataFrame:
     """Drop blocks larger than `max_block_size` entirely (classic block
     purging: such keys are stop-words — their pair mass is quadratic
-    noise). salt_keys' census (blocking.census_hot_blocks) + broadcast
-    LEFT ANTI join of the hot slice; falls back to a shuffle anti-join if
-    the hot slice is degenerate-huge."""
-    hot = census_hot_blocks(keys, max_block_size).select("pass", "block_key")
-    hot = hot.localCheckpoint(eager=True)
-    if hot.count() <= hot_broadcast_limit:
-        hot = F.broadcast(hot)
+    noise). A LEFT ANTI join of salt_keys' hot slice (blocking._hot_slice:
+    broadcast, or a shuffle anti-join if the slice is degenerate-huge)."""
+    hot = _hot_slice(keys, max_block_size)
     return keys.join(hot, ["pass", "block_key"], "left_anti")
 
 

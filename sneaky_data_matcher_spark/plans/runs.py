@@ -3,17 +3,18 @@
 Generalizes the reference's job-control surface (SURVEY.md §2 X1-X3, A1):
   - Upload/Match progress entities (processed/outOf watermarks,
     entities/MatchEntity.java:5-11, repositories/SearchRepository.java:147-167)
-    become a `_metrics` table with one row per (stage, partition) and a
-    `_jobs` table with one row per stage completion.
+    become a `_jobs` table with one row per stage commit: the stage's rows,
+    partition count, largest partition and, nested in `partitions`, the
+    (partition_id, rows) count of every partition.
   - Resume-by-skipping-processed-rows (services/UploadsService.java:64-71)
     becomes stage-level idempotence: a stage whose committed output exists
     is loaded, not recomputed — atomic commits make row-skipping obsolete.
   - Force-complete (X3) becomes deleting/ignoring downstream stages.
 
-Metrics are computed with `spark_partition_id()` grouping — one cheap
-map-side aggregation per persisted stage — giving the per-partition lineage
-row counts the north rule requires (skew visibility included: the census of
-rows-per-partition IS the skew report).
+A stage commit is recorded by one aggregation over the committed table
+(`spark_partition_id()` grouping, map-side) and one append — the census
+of rows-per-partition IS the skew report. `metrics()` unnests it to one
+row per (stage, partition).
 """
 
 from __future__ import annotations
@@ -25,7 +26,6 @@ from pyspark.sql import functions as F
 
 from ..sources.io import TableIO
 
-METRICS_TABLE = "_metrics"
 JOBS_TABLE = "_jobs"
 STATUS_TABLE = "_status"
 ENTITY_REGISTRY_TABLE = "_entity_registry"
@@ -58,11 +58,12 @@ class Run:
     # -- lifecycle (X1/X3: UploadDescriptor.Status + Match force-complete) --
 
     def _set_status(self, status: str) -> None:
-        df = self.spark.createDataFrame(
-            [(self.run_id, status, float(time.time()))],
-            "run_id string, status string, recorded_at double",
+        row = self.spark.range(1).select(
+            F.lit(self.run_id).alias("run_id"),
+            F.lit(status).alias("status"),
+            F.lit(float(time.time())).alias("recorded_at"),
         )
-        self.io.append(df, STATUS_TABLE)
+        self.io.append(row, STATUS_TABLE)
 
     def status(self) -> str:
         """Latest lifecycle status (PROCESSING until marked otherwise)."""
@@ -112,33 +113,28 @@ class Run:
 
     def _record(self, stage: str, df: DataFrame) -> None:
         now = float(time.time())
-        per_part = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .select(
-                F.lit(self.run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                "partition_id",
-                "rows",
-                F.lit(now).alias("recorded_at"),
-            )
+        per_part = df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
+            F.count("*").alias("rows")
         )
-        self.io.append(per_part, METRICS_TABLE)
-        total = per_part.agg(
-            F.sum("rows").alias("rows"), F.count("*").alias("n_partitions"),
-            F.max("rows").alias("max_partition_rows"),
-        ).select(
+        job = per_part.agg(
             F.lit(self.run_id).alias("run_id"),
             F.lit(stage).alias("stage"),
-            F.col("rows").cast("long"),
-            "n_partitions",
-            F.col("max_partition_rows").cast("long"),
+            # a stage with no rows has no partitions to sum
+            F.coalesce(F.sum("rows"), F.lit(0)).alias("rows"),
+            F.count("*").alias("n_partitions"),
+            F.max("rows").alias("max_partition_rows"),
+            F.sort_array(F.collect_list(F.struct("partition_id", "rows"))).alias(
+                "partitions"
+            ),
             F.lit(now).alias("recorded_at"),
         )
-        self.io.append(total, JOBS_TABLE)
+        self.io.append(job, JOBS_TABLE)
 
     def metrics(self) -> DataFrame:
-        return self.io.load(METRICS_TABLE)
+        """One row per (stage, partition), unnested from `_jobs`."""
+        return self.jobs().select(
+            "run_id", "stage", F.inline("partitions"), "recorded_at"
+        )
 
     def jobs(self) -> DataFrame:
         return self.io.load(JOBS_TABLE)
@@ -149,16 +145,12 @@ def create_run(
 ) -> Run:
     """Create (or reopen) a named run. exist_ok=False mirrors the
     reference's duplicate-name 409. Existence is detected through TableIO
-    (a committed status/jobs table or stage), not the local filesystem, so
+    (a committed status or jobs table), not the local filesystem, so
     it works for Iceberg-catalog and object-store bases too; creation
     writes the PROCESSING status row, which is what a later create_run
     collides on."""
     run = Run(spark, base_dir, run_id)
-    exists = (
-        run.io.exists(STATUS_TABLE)
-        or run.io.exists(JOBS_TABLE)
-        or bool(run.completed_stages())
-    )
+    exists = run.io.exists(STATUS_TABLE) or run.io.exists(JOBS_TABLE)
     if exists and not exist_ok:
         raise RunExistsError(run_id)
     if not exists:

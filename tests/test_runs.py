@@ -64,6 +64,36 @@ def test_lineage_metrics_recorded(spark, synth_corpus, base_dir):
     assert per_stage["clusters"] == out["clusters"].count()
     # every metric row carries partition-level lineage
     assert m.where(F.col("partition_id").isNull()).count() == 0
+    # each stage's _jobs totals are the sum, count and max of its partitions
+    from_parts = {
+        r["stage"]: (r["rows"], r["n_partitions"], r["max_partition_rows"])
+        for r in m.groupBy("stage")
+        .agg(
+            F.sum("rows").alias("rows"),
+            F.count("*").alias("n_partitions"),
+            F.max("rows").alias("max_partition_rows"),
+        )
+        .collect()
+    }
+    recorded = {
+        r["stage"]: (r["rows"], r["n_partitions"], r["max_partition_rows"])
+        for r in run.jobs().collect()
+    }
+    assert recorded == from_parts
+
+
+def test_empty_stage_recorded(spark, base_dir):
+    """A committed stage with no rows records rows = 0 (not NULL) and
+    still counts as completed."""
+    run = Run(spark, base_dir, "run_empty")
+    out = run.stage("empty", lambda: spark.range(0).withColumnRenamed("id", "doc_id"))
+    assert out.count() == 0
+    [job] = run.jobs().collect()
+    assert job["rows"] == 0
+    assert job["n_partitions"] == 0
+    assert job["partitions"] == []
+    assert run.completed_stages() == ["empty"]
+    assert run.metrics().count() == 0
 
 
 def test_force_recompute(spark, synth_corpus, base_dir):
