@@ -3,22 +3,25 @@
 Generalizes the reference's job-control surface (SURVEY.md §2 X1-X3, A1):
   - Upload/Match progress entities (processed/outOf watermarks,
     entities/MatchEntity.java:5-11, repositories/SearchRepository.java:147-167)
-    become a `_jobs` table with one row per stage commit: the stage's rows,
-    partition count, largest partition and, nested in `partitions`, the
-    (partition_id, rows) count of every partition.
+    become the committed stage tables themselves: `jobs()` has one row per
+    committed stage with its rows, partition count, largest partition and,
+    nested in `partitions`, the (partition_id, rows) count of every write
+    task — all read on the driver from the stage's `_SUCCESS` marker and
+    parquet footers, as Delta Lake keeps per-file row counts as table
+    metadata. Nothing is written besides the stage, so a stage commit is
+    one Spark job and a committed stage is always recorded.
   - Resume-by-skipping-processed-rows (services/UploadsService.java:64-71)
     becomes stage-level idempotence: a stage whose committed output exists
     is loaded, not recomputed — atomic commits make row-skipping obsolete.
   - Force-complete (X3) becomes deleting/ignoring downstream stages.
 
-A stage commit is recorded by one aggregation over the committed table
-(`spark_partition_id()` grouping, map-side) and one append — the census
-of rows-per-partition IS the skew report. `metrics()` unnests it to one
-row per (stage, partition).
+Names starting with `_` are run metadata (the `_status` table), never
+stages. `metrics()` unnests `jobs()` to one row per (stage, partition).
 """
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,7 +29,6 @@ from pyspark.sql import functions as F
 
 from ..sources.io import TableIO
 
-JOBS_TABLE = "_jobs"
 STATUS_TABLE = "_status"
 ENTITY_REGISTRY_TABLE = "_entity_registry"
 
@@ -34,6 +36,12 @@ PROCESSING = "PROCESSING"
 FINISHED = "FINISHED"
 FINISHED_WITH_ERROR = "FINISHED_WITH_ERROR"
 FORCE_COMPLETED = "FORCE_COMPLETED"
+
+JOBS_SCHEMA = (
+    "run_id string, stage string, rows long, n_partitions long, "
+    "max_partition_rows long, "
+    "partitions array<struct<partition_id: int, rows: long>>, recorded_at double"
+)
 
 
 class RunExistsError(RuntimeError):
@@ -91,66 +99,59 @@ class Run:
         """Return the stage output, computing + committing it only if no
         committed output exists (resume semantics). ``build`` is a
         zero-arg callable returning the stage DataFrame."""
+        if name.startswith("_"):
+            raise ValueError(f"stage names starting with '_' are reserved: {name!r}")
         if not force and self.io.exists(name):
             return self.io.load(name)
         if self.status() == FORCE_COMPLETED:
             raise RunForceCompleted(self.run_id)
-        df = build()
-        self.io.save(df, name)
-        out = self.io.load(name)
-        self._record(name, out)
-        return out
+        self.io.save(build(), name)
+        return self.io.load(name)
 
     def completed_stages(self) -> list[str]:
-        if not self.io.exists(JOBS_TABLE):
+        """Committed stages: the run directory's non-`_` subdirectories
+        holding `_SUCCESS`, the check stage() resumes on."""
+        if not os.path.isdir(self.io.base):
             return []
-        return [
-            r["stage"]
-            for r in self.io.load(JOBS_TABLE).select("stage").distinct().collect()
-        ]
+        return sorted(
+            e.name
+            for e in os.scandir(self.io.base)
+            if e.is_dir() and not e.name.startswith("_") and self.io.exists(e.name)
+        )
 
     # -- lineage / metrics ---------------------------------------------------
 
-    def _record(self, stage: str, df: DataFrame) -> None:
-        now = float(time.time())
-        per_part = df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-            F.count("*").alias("rows")
-        )
-        job = per_part.agg(
-            F.lit(self.run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            # a stage with no rows has no partitions to sum
-            F.coalesce(F.sum("rows"), F.lit(0)).alias("rows"),
-            F.count("*").alias("n_partitions"),
-            F.max("rows").alias("max_partition_rows"),
-            F.sort_array(F.collect_list(F.struct("partition_id", "rows"))).alias(
-                "partitions"
-            ),
-            F.lit(now).alias("recorded_at"),
-        )
-        self.io.append(job, JOBS_TABLE)
+    def jobs(self) -> DataFrame:
+        """One row per committed stage, ordered by commit time, built on
+        the driver from the stage files (TableIO.commit_layout): no Spark
+        job runs until the frame is used."""
+        records = []
+        for stage in self.completed_stages():
+            committed_at, parts = self.io.commit_layout(stage)
+            rows = [n for _, n in parts]
+            records.append((
+                self.run_id, stage, sum(rows), len(rows), max(rows, default=None),
+                parts, committed_at,
+            ))
+        records.sort(key=lambda r: r[-1])
+        return self.spark.createDataFrame(records, JOBS_SCHEMA)
 
     def metrics(self) -> DataFrame:
-        """One row per (stage, partition), unnested from `_jobs`."""
+        """One row per (stage, partition), unnested from `jobs()`."""
         return self.jobs().select(
             "run_id", "stage", F.inline("partitions"), "recorded_at"
         )
-
-    def jobs(self) -> DataFrame:
-        return self.io.load(JOBS_TABLE)
 
 
 def create_run(
     spark: SparkSession, base_dir: str, run_id: str, exist_ok: bool = True
 ) -> Run:
     """Create (or reopen) a named run. exist_ok=False mirrors the
-    reference's duplicate-name 409. Existence is detected through TableIO
-    (a committed status or jobs table), not the local filesystem, so
-    it works for Iceberg-catalog and object-store bases too; creation
-    writes the PROCESSING status row, which is what a later create_run
-    collides on."""
+    reference's duplicate-name 409. A run exists once it has a status
+    table or any committed stage; creation writes the PROCESSING status
+    row, which is what a later create_run collides on."""
     run = Run(spark, base_dir, run_id)
-    exists = run.io.exists(STATUS_TABLE) or run.io.exists(JOBS_TABLE)
+    exists = run.io.exists(STATUS_TABLE) or bool(run.completed_stages())
     if exists and not exist_ok:
         raise RunExistsError(run_id)
     if not exists:

@@ -125,6 +125,28 @@ class TableIO:
             return self.spark.catalog.tableExists(f"{self.catalog}.{name}")
         return os.path.exists(os.path.join(self._path(name), "_SUCCESS"))
 
+    def commit_layout(self, name: str) -> tuple[float, list[tuple[int, int]]]:
+        """(commit time, [(partition_id, rows), ...]) of a committed table,
+        read on the driver with no Spark job: the commit time is the mtime
+        of its _SUCCESS marker, ``partition_id`` the write task's number
+        from each ``part-NNNNN`` file name and ``rows`` the sum of that
+        task's parquet footer row counts; tasks that wrote no rows are
+        left out. Parquet fallback only: `Run` always builds its TableIO
+        without a catalog, so there is no Iceberg branch (a snapshot's
+        summary holds the same facts)."""
+        import pyarrow.parquet as pq
+
+        if self.use_iceberg or self.fmt != "parquet":
+            raise ValueError("commit_layout reads parquet fallback tables only")
+        path = self._path(name)
+        rows: dict[int, int] = {}
+        for entry in os.scandir(path):
+            if entry.name.startswith("part-") and entry.name.endswith(".parquet"):
+                pid = int(entry.name.split("-")[1])
+                rows[pid] = rows.get(pid, 0) + pq.read_metadata(entry.path).num_rows
+        committed_at = os.stat(os.path.join(path, "_SUCCESS")).st_mtime
+        return committed_at, sorted((p, n) for p, n in rows.items() if n)
+
     def delete(self, name: str) -> None:
         if self.use_iceberg:
             self.spark.sql(f"DROP TABLE IF EXISTS {self.catalog}.{name}")

@@ -64,7 +64,7 @@ def test_lineage_metrics_recorded(spark, synth_corpus, base_dir):
     assert per_stage["clusters"] == out["clusters"].count()
     # every metric row carries partition-level lineage
     assert m.where(F.col("partition_id").isNull()).count() == 0
-    # each stage's _jobs totals are the sum, count and max of its partitions
+    # each stage's jobs() totals are the sum, count and max of its partitions
     from_parts = {
         r["stage"]: (r["rows"], r["n_partitions"], r["max_partition_rows"])
         for r in m.groupBy("stage")
@@ -96,6 +96,45 @@ def test_empty_stage_recorded(spark, base_dir):
     assert run.metrics().count() == 0
 
 
+def test_committed_stage_without_record_is_completed(spark, base_dir):
+    """A stage committed by its save alone (a crash right after the write)
+    is completed, recorded and makes the run exist; `_` names are run
+    metadata, never stages."""
+    from sneaky_data_matcher_spark.plans.runs import RunExistsError, create_run
+
+    run = Run(spark, base_dir, "run_crash")
+    run.io.save(spark.range(37).withColumnRenamed("id", "doc_id"), "canon")
+    assert run.completed_stages() == ["canon"]
+    [job] = run.jobs().collect()
+    assert (job["stage"], job["rows"]) == ("canon", 37)
+    with pytest.raises(RunExistsError):
+        create_run(spark, base_dir, "run_crash", exist_ok=False)
+    with pytest.raises(ValueError):
+        run.stage("_status", lambda: spark.range(1))
+
+
+def test_stage_commit_is_one_sql_execution(spark, base_dir):
+    """A stage commit is one Spark SQL execution (the save); reading the
+    run's records runs none. Counted by the last execution id: the status
+    store keeps only the latest spark.sql.ui.retainedExecutions."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty(30_000)
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    run = Run(spark, base_dir, "run_count")
+    before = executions()
+    run.stage("canon", lambda: spark.range(100).withColumnRenamed("id", "doc_id"))
+    assert executions() == before + 1
+    run.jobs()
+    run.metrics()
+    assert run.completed_stages() == ["canon"]
+    assert executions() == before + 1
+
+
 def test_force_recompute(spark, synth_corpus, base_dir):
     docs, _ = synth_corpus
     run = Run(spark, base_dir, "run_f")
@@ -103,6 +142,8 @@ def test_force_recompute(spark, synth_corpus, base_dir):
     assert df1.count() == 10
     df2 = run.stage("canon", lambda: P.canonicalize_docs(docs).limit(20), force=True)
     assert df2.count() == 20
+    # the re-commit replaces the stage's record
+    assert [r["rows"] for r in run.jobs().collect()] == [20]
 
 
 def test_run_name_collision_and_force_complete(spark, synth_corpus, base_dir):

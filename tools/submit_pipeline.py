@@ -35,7 +35,7 @@ def main(argv: list[str]) -> int:
     out = run_pipeline(spark, load_docs(spark, docs_path), out_dir, run_id)
     summary = {
         "run_id": run_id,
-        "stages": [r["stage"] for r in out["run"].jobs().select("stage").distinct().collect()],
+        "stages": out["run"].completed_stages(),
         "n_docs": out["canon"].count(),
         "n_pairs": out["scored"].count(),
         "n_clusters": out["clusters"].select("cluster_id").distinct().count(),
